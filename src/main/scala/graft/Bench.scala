@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import scala.collection.mutable.LinkedHashMap
+import scala.util.control.NonFatal
 
 /** Benchmark entry: times every SparkEntry query at the sf dir given by
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line for the driver.
@@ -29,8 +30,12 @@ object Bench {
     // Warmup: exercise the JVM, codegen, shuffle machinery, and the parquet
     // footers of every table once, untimed.
     spark.range(1000000L).selectExpr("sum(id)").collect()
+    // NonFatal only, and reported: an OOM must not be warmed through
+    def warmFailed(what: String, e: Throwable): Unit =
+      System.err.println(s"[bench] warm-up $what failed: $e")
     Tables.names.foreach { t =>
-      try Tables(spark, sfDir, t).count() catch { case _: Throwable => () }
+      try Tables(spark, sfDir, t).count()
+      catch { case NonFatal(e) => warmFailed(s"table $t", e) }
     }
     // Then run the FULL suite once at the smallest sf, untimed. The
     // expression trees are sf-independent, so this compiles the same
@@ -43,8 +48,9 @@ object Bench {
     val warmDir = new java.io.File(new java.io.File(sfDir).getParentFile,
       "sf0.001")
     if (warmDir.isDirectory) {
-      SparkEntry.queries.foreach { case (_, fn) =>
-        try fn(spark, warmDir.getPath).count() catch { case _: Throwable => () }
+      SparkEntry.queries.foreach { case (name, fn) =>
+        try fn(spark, warmDir.getPath).count()
+        catch { case NonFatal(e) => warmFailed(name, e) }
       }
     }
 
@@ -133,7 +139,7 @@ object Bench {
       try w.println(line) finally w.close()
     } catch {
       // NonFatal only: an OOM mid-benchmark must surface, not be swallowed
-      case scala.util.control.NonFatal(_) => () // bench numbers still print
+      case NonFatal(_) => () // bench numbers still print
     }
     // The driver archives only the TAIL of this process's output (2000
     // chars in round 4, which truncated the wall map and total out of

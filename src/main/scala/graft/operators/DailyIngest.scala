@@ -46,6 +46,10 @@ import sinks.Sinks
   */
 object DailyIngest {
 
+  /** The text layouts' index families. */
+  private val Families = Seq("text_hash", "norm_hash", "text_bands",
+    "text_sets", "substr_windows", "eval_grams", "eval_bands", "eval_sets")
+
   /** (corpus, batch) on the train side; see the universe layout above.
     * `day` picks which DeconBatchMod residue arrives today, and
     * `pendingDays` are residues NOT yet ingested (tomorrow's batches) —
@@ -474,67 +478,111 @@ object DailyIngest {
   }
 
   /** The day's shared core: disposition + artifacts + (layout-specific)
-    * index persistence + bookkeeping. `persistNext` runs between the
-    * report writes and the ledger, receiving nothing — the snapshot
-    * pipeline compacts into `index_next`, the delta pipeline appends a
-    * generation in place. */
+    * index persistence + bookkeeping. Its jobs are small, so it runs
+    * independent ones concurrently ([[graft.Parallel]]) instead of
+    * queueing one one-task job behind the next, in three steps:
+    *
+    *  1. the eight index reads run side by side (see below);
+    *  2. the batch's signature tables (bands, sets) and window rows
+    *     materialize side by side;
+    *  3. four branches fan out: the disposition tail ([[dispositionTail]]:
+    *     disposition, then `kept_docs` / `disposition.parquet` / ledger /
+    *     logs), the novelty report, the substring report, and
+    *     `persistNext` (the snapshot pipeline compacts into `index_next`,
+    *     the delta pipeline appends a generation in place).
+    *
+    * A frame read by more than one concurrent job is EAGER
+    * (`Materialize.now`), because concurrent jobs over a lazy checkpoint
+    * each recompute it (the race the Materialize scaladoc describes): the
+    * bands and sets feed the near-dup and fuzzy gates AND persistNext,
+    * and the window rows feed both reports AND persistNext. `batch` must
+    * come in eager for the same reason. A frame read by one branch stays
+    * lazy.
+    *
+    * Every `idx` read the gates and reports use is constructed first
+    * (each runs a footer-reading job): a parquet read lists its files
+    * when it is constructed, so none can list the generation the delta
+    * persistNext is writing into the same root (that persistNext reads
+    * no index; the snapshot one reads `indexDir`, which nothing writes). The disposition's plan is built
+    * inside its branch: under AQE, building a gate's lazy checkpoint
+    * already runs its shuffle stages. No branch may mutate session conf
+    * (`Tables(…, "events")` does). */
   private def writeDay(spark: SparkSession, batch: DataFrame,
       idx: String => DataFrame, outDir: String, ts: String)(
       persistNext: (DataFrame, DataFrame, DataFrame) => Unit): DataFrame = {
-    // the batch's MinHash tables feed the near-dup gate AND the index
-    // persistence, its window rows feed BOTH reports AND the index —
-    // each computed once per day (checkpointed), not once per consumer
-    // (the window explode was being paid three times per day)
-    val (rawBands, batchSets0) = LLMQueries.signatureTables(batch)
-    val batchBands = rawBands.transform(graft.Materialize.shared)
-    val batchSets = batchSets0.transform(graft.Materialize.shared)
-    val batchWins = CurationQueries.docWindows(batch)
-      .transform(graft.Materialize.shared)
-    val disposition = dispositionOf(batch, idx("text_hash"),
-      idx("norm_hash"), idx("text_bands"), idx("text_sets"),
-      idx("eval_grams"), idx("eval_bands"), idx("eval_sets"),
-      batchBands, batchSets)
-      .transform(graft.Materialize.shared) // feeds kept join, summary, write
+    val index = Families.zip(
+      graft.Parallel.all(Families.map(name => () => idx(name)): _*)).toMap
+    val (rawBands, rawSets) = LLMQueries.signatureTables(batch)
+    val Seq(batchBands, batchSets, batchWins) = graft.Parallel.all(
+      () => rawBands.transform(graft.Materialize.now), // 2 gates + persistNext
+      () => rawSets.transform(graft.Materialize.now), // 2 gates + persistNext
+      () => CurationQueries.docWindows(batch)
+        .transform(graft.Materialize.now)) // both reports + persistNext
 
+    var summary: DataFrame = null // the disposition branch's result
+    graft.Parallel.all(
+      () => summary = dispositionTail(batch, dispositionOf(batch,
+        index("text_hash"), index("norm_hash"), index("text_bands"),
+        index("text_sets"), index("eval_grams"), index("eval_bands"),
+        index("eval_sets"), batchBands, batchSets), outDir, ts),
+      () => CurationQueries
+        .noveltyReportFrom(index("substr_windows"), batch, batchWins)
+        .write.mode("overwrite").parquet(s"$outDir/novelty_report.parquet"),
+      () => CurationQueries
+        .incrementalSubstringReportFrom(index("substr_windows"), batch,
+          batchWins)
+        .write.mode("overwrite")
+        .parquet(s"$outDir/substring_report.parquet"),
+      () => persistNext(batchBands, batchSets, batchWins))
+    summary
+  }
+
+  /** [[writeDay]]'s disposition branch: the disposition materializes
+    * once, the summary once, then the two artifacts and the two
+    * bookkeeping writes run side by side. Both frames are EAGER for the
+    * writeDay reason: the disposition feeds the kept join, its own write
+    * and the summary; the summary feeds the ledger and log writes and
+    * the caller. Returns the summary. */
+  private def dispositionTail(batch: DataFrame, disposition0: DataFrame,
+      outDir: String, ts: String): DataFrame = {
+    val disposition = disposition0
+      .transform(graft.Materialize.now) // kept join, write, summary
     val kept = batch.join(
       disposition.filter(col("disposition") === "kept")
         .select(col("doc_id")), Seq("doc_id"), "left_semi")
-
-    // artifacts
-    kept.write.mode("overwrite").parquet(s"$outDir/kept_docs.parquet")
-    disposition.orderBy(col("doc_id")).write.mode("overwrite")
-      .parquet(s"$outDir/disposition.parquet")
-    CurationQueries.noveltyReportFrom(idx("substr_windows"), batch,
-        batchWins)
-      .write.mode("overwrite").parquet(s"$outDir/novelty_report.parquet")
-    CurationQueries.incrementalSubstringReportFrom(idx("substr_windows"),
-        batch, batchWins)
-      .write.mode("overwrite")
-      .parquet(s"$outDir/substring_report.parquet")
-
-    persistNext(batchBands, batchSets, batchWins)
-
     // bookkeeping: one ledger row + one log line per step
     val summary = disposition.groupBy(col("disposition").as("step"))
       .agg(count(lit(1)).as("n_docs"))
       .unionByName(batch.agg(count(lit(1)).as("n_docs"))
         .select(lit("batch_in").as("step"), col("n_docs")))
       .orderBy(col("step"))
-      .transform(graft.Materialize.shared) // feeds ledger, logs AND return
-    // job_id = hash(ts, step): unique per ingest day even though the
-    // ledger APPENDS across days (monotonically_increasing_id restarts
-    // at 0 every run — ADVICE r10, fixed alongside ReleaseBuild)
-    Sinks.appendLedger(summary
-      .select(xxhash64(lit(ts), col("step")).as("job_id"), col("step"),
-        col("n_docs"), lit(ts).as("ts"), lit("completed").as("status")),
-      s"$outDir/ledger")
-    Sinks.writeLogs(summary
-      .select(lit(ts).as("ts"), lit("INFO").as("level"),
-        lit("daily_ingest_step").as("event"),
-        concat_ws(" ", col("step"), col("n_docs")).as("message")),
-      s"$outDir/logs")
+      .transform(graft.Materialize.now) // concurrent ledger + logs, AND return
+    graft.Parallel.all(
+      () => kept.write.mode("overwrite").parquet(s"$outDir/kept_docs.parquet"),
+      () => disposition.orderBy(col("doc_id")).write.mode("overwrite")
+        .parquet(s"$outDir/disposition.parquet"),
+      // job_id = hash(ts, step): unique per ingest day even though the
+      // ledger APPENDS across days (monotonically_increasing_id restarts
+      // at 0 every run — ADVICE r10, fixed alongside ReleaseBuild)
+      () => Sinks.appendLedger(summary
+        .select(xxhash64(lit(ts), col("step")).as("job_id"), col("step"),
+          col("n_docs"), lit(ts).as("ts"), lit("completed").as("status")),
+        s"$outDir/ledger"),
+      () => Sinks.writeLogs(summary
+        .select(lit(ts).as("ts"), lit("INFO").as("level"),
+          lit("daily_ingest_step").as("event"),
+          concat_ws(" ", col("step"), col("n_docs")).as("message")),
+        s"$outDir/logs"))
     summary
   }
+
+  /** Writes each (frame, family) pair as `path(family)`, all at once —
+    * the delta layout's family writes are mutually independent. */
+  private def writeFamilies(frames: (DataFrame, String)*)(
+      path: String => String): Unit =
+    graft.Parallel.all(frames.map { case (df, name) =>
+      () => df.write.mode("overwrite").parquet(path(name))
+    }: _*)
 
   /** Runs the pipeline; returns the summary frame (step, n_docs) that
     * is also written to the ledger. `ts` is caller-supplied so runs
@@ -543,7 +591,7 @@ object DailyIngest {
       outDir: String, ts: String = "1970-01-01T00:00:00Z",
       day: Int = 0): DataFrame = {
     val batch = split(spark, dataDir, day, Set(day))._2
-      .transform(graft.Materialize.shared) // feeds every gate + the writes
+      .transform(graft.Materialize.now) // every gate + concurrent writes
     def idx(name: String): DataFrame =
       spark.read.parquet(s"$indexDir/$name.parquet")
 
@@ -589,25 +637,27 @@ object DailyIngest {
 
   /** Seeds the delta layout: the corpus-side index of every family as
     * generation 0 under ONE root that [[runDelta]] both reads and
-    * extends. */
+    * extends. The eight writes run concurrently ([[graft.Parallel]]);
+    * `corpus` and `all` feed several of them, but as plain scans with no
+    * checkpoint, so each write plans its own scan as the sequential
+    * writes did and no lazy checkpoint is raced. */
   def writeIndexesDelta(spark: SparkSession, dataDir: String,
       rootDir: String, pendingDays: Set[Int] = Set(0)): Unit = {
     val (corpus, _) =
       split(spark, dataDir, pendingDays.head, pendingDays)
-    def w(df: DataFrame, name: String): Unit =
-      df.write.mode("overwrite").parquet(s"$rootDir/$name.parquet/gen=0")
-    w(LLMQueries.hashIndex(corpus), "text_hash")
-    w(LLMQueries.normHashIndex(corpus), "norm_hash")
     val (bands, sets) = LLMQueries.signatureTables(corpus)
-    w(bands, "text_bands")
-    w(sets, "text_sets")
-    w(CurationQueries.substrWindowIndex(corpus), "substr_windows")
     val all = Tables(spark, dataDir, "documents")
-    w(CurationQueries.evalGramIndex(all), "eval_grams")
     val (eBands, eSets) =
       LLMQueries.signatureTables(all.filter(col("doc_id") % 10 === 0))
-    w(eBands, "eval_bands")
-    w(eSets, "eval_sets")
+    writeFamilies(
+      LLMQueries.hashIndex(corpus) -> "text_hash",
+      LLMQueries.normHashIndex(corpus) -> "norm_hash",
+      bands -> "text_bands",
+      sets -> "text_sets",
+      CurationQueries.substrWindowIndex(corpus) -> "substr_windows",
+      CurationQueries.evalGramIndex(all) -> "eval_grams",
+      eBands -> "eval_bands",
+      eSets -> "eval_sets")(name => s"$rootDir/$name.parquet/gen=0")
   }
 
   /** Folds a delta root's generations into a fresh single-generation
@@ -621,24 +671,27 @@ object DailyIngest {
     * is gen 0). `throughGen` bounds the fold to COMMITTED generations:
     * a vacuum running beside an in-flight day must not absorb that
     * day's (possibly partial, possibly about-to-be-replayed) partition
-    * — fold gen ≤ day, exactly like the readers. */
+    * — fold gen ≤ day, exactly like the readers.
+    *
+    * The eight families fold concurrently ([[graft.Parallel]]), each
+    * read inside its own task (a read runs a footer-reading job, and
+    * nothing writes `rootDir` here); no frame is shared between them,
+    * so none needs materializing. */
   def foldDelta(spark: SparkSession, rootDir: String,
       outRootDir: String, throughGen: Int = Int.MaxValue): Unit = {
-    def r(name: String): DataFrame =
-      spark.read.parquet(s"$rootDir/$name.parquet")
+    def folded(name: String): DataFrame = {
+      val gens = spark.read.parquet(s"$rootDir/$name.parquet")
         .filter(col("gen") <= throughGen).drop("gen")
-    def w(df: DataFrame, name: String): Unit =
-      df.write.mode("overwrite")
-        .parquet(s"$outRootDir/$name.parquet/gen=0")
-    w(r("text_hash").distinct(), "text_hash")
-    w(r("norm_hash").distinct(), "norm_hash")
-    w(r("text_bands"), "text_bands")
-    w(r("text_sets"), "text_sets")
-    w(r("substr_windows")
-      .groupBy(col("wh")).agg(sum(col("nd")).as("nd")), "substr_windows")
-    w(r("eval_grams"), "eval_grams")
-    w(r("eval_bands"), "eval_bands")
-    w(r("eval_sets"), "eval_sets")
+      name match {
+        case "text_hash" | "norm_hash" => gens.distinct()
+        case "substr_windows" =>
+          gens.groupBy(col("wh")).agg(sum(col("nd")).as("nd"))
+        case _ => gens
+      }
+    }
+    graft.Parallel.all(Families.map(name => () =>
+      folded(name).write.mode("overwrite")
+        .parquet(s"$outRootDir/$name.parquet/gen=0")): _*)
   }
 
   /** [[run]] against the delta layout: same gates, same artifacts, but
@@ -648,7 +701,7 @@ object DailyIngest {
       outDir: String, ts: String = "1970-01-01T00:00:00Z",
       day: Int = 0): DataFrame = {
     val batch = split(spark, dataDir, day, Set(day))._2
-      .transform(graft.Materialize.shared) // feeds every gate + the writes
+      .transform(graft.Materialize.now) // every gate + concurrent writes
     // gen ≤ day: a crashed attempt's own gen=day+1 partition must not
     // feed the gates on retry (the batch would self-collide in the
     // exact gate) — the filter is partition pruning, zero read cost
@@ -657,15 +710,14 @@ object DailyIngest {
         .filter(col("gen") <= day).drop("gen")
 
     writeDay(spark, batch, idx, outDir, ts) { (bBands, bSets, bWins) =>
-      def w(df: DataFrame, name: String): Unit =
-        df.write.mode("overwrite")
-          .parquet(s"$rootDir/$name.parquet/gen=${day + 1}")
-      w(LLMQueries.hashIndex(batch), "text_hash")
-      w(LLMQueries.normHashIndex(batch), "norm_hash")
-      w(bBands, "text_bands")
-      w(bSets, "text_sets")
-      w(CurationQueries.substrWindowIndexFrom(bWins), "substr_windows")
       // eval_grams is frozen per benchmark release — gen 0 only
+      writeFamilies(
+        LLMQueries.hashIndex(batch) -> "text_hash",
+        LLMQueries.normHashIndex(batch) -> "norm_hash",
+        bBands -> "text_bands",
+        bSets -> "text_sets",
+        CurationQueries.substrWindowIndexFrom(bWins) -> "substr_windows")(
+        name => s"$rootDir/$name.parquet/gen=${day + 1}")
     }
   }
 }

@@ -111,21 +111,6 @@ object IndexStore extends IndexStoreCompaction with IndexStoreCapped {
   def writeIvfCentroids(corpusEmb: DataFrame, dir: String): Unit =
     write(VectorQueries.centroidsOf(corpusEmb), dir, "ivf_centroids")
 
-  /** Write every family's corpus index in one pass. */
-  def writeAll(spark: SparkSession, dataDir: String, dir: String): Unit = {
-    val (corpusDocs, _) = docSplit(spark, dataDir)
-    val (corpusVecs, _) = vecSplit(spark, dataDir)
-    writeTextNearDup(corpusDocs, dir)
-    writeTextExact(corpusDocs, dir)
-    writeSegments(corpusDocs, dir)
-    writeVectorFamilies(corpusVecs, dir) // one shared family core
-    writeQuantizerStats(spark, dataDir, dir) // centroids + cell stats
-    writeMediaNearDup(spark, dataDir, dir)
-    writeBpeVocab(spark, dataDir, dir)
-    writeDsirModel(spark, dataDir, dir)
-    writeAudioFps(spark, dataDir, dir)
-  }
-
   // ---- per-family daily leg (parquet index + today's batch) ------------
   //
   // Each runner must equal its in-memory qNN twin row for row — the

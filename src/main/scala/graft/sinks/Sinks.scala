@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
+import scala.util.control.NonFatal
 
 /** Write-path operators (SURVEY.md §2.1 S5–S8).
   *
@@ -139,7 +140,9 @@ object Sinks {
 
 /** T6: retry with exponential backoff (README.md:84,146-147,161) — a
   * driver-side concern (Spark task retries cover executor-side failure).
-  * Sleeps are injectable so tests run instantly.
+  * Sleeps are injectable so tests run instantly. Only non-fatal errors
+  * retry: a fatal one (OOM, stack overflow) propagates on its first
+  * attempt instead of being slept on.
   */
 object Retry {
   def withBackoff[A](maxAttempts: Int = 3, baseDelayMs: Long = 100,
@@ -149,7 +152,7 @@ object Retry {
     while (attempt < maxAttempts) {
       try return op()
       catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           last = e
           attempt += 1
           if (attempt < maxAttempts) sleep(baseDelayMs << (attempt - 1))

@@ -88,6 +88,18 @@ class SinksSpec extends SparkSpec {
     assert(calls == 3 && ex.getMessage == "boom 3")
   }
 
+  test("retry propagates a fatal error on its first attempt, unslept") {
+    var calls = 0
+    val slept = scala.collection.mutable.ArrayBuffer[Long]()
+    intercept[StackOverflowError] {
+      Retry.withBackoff(maxAttempts = 3, baseDelayMs = 100,
+        sleep = slept.append(_)) { () =>
+        calls += 1; throw new StackOverflowError("fatal")
+      }
+    }
+    assert(calls == 1 && slept.isEmpty)
+  }
+
   // --- bucketed upsert (S6 at scale) ---------------------------------
 
   private def bucketFiles(dir: String): Map[String, Set[(String, Long)]] = {
