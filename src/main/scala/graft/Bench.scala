@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable.LinkedHashMap
 import scala.util.control.NonFatal
 
@@ -16,16 +15,7 @@ import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // see Verify.scala: Spark 4.1 union-partitioning claim crashes SMJ zips
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
 
     // Warmup: exercise the JVM, codegen, shuffle machinery, and the parquet
     // footers of every table once, untimed.
@@ -57,7 +47,7 @@ object Bench {
     // Noise-immune companion metric: co-tenant load bursts inflate wall
     // time but barely move executor CPU (PLANS.md round-3/4 findings), so
     // each query also reports the executorCpuTime of its best pass.
-    val cpuNs = Timing.cpuCounter(spark)
+    val counters = Harness.counters(spark)
 
     val times = LinkedHashMap[String, Double]()
     val cpuSecs = LinkedHashMap[String, Double]()
@@ -76,9 +66,9 @@ object Bench {
       System.gc()
       // real listener-bus drain on both sides of the measurement: under
       // load, task-end events outlive any fixed sleep and leak one
-      // query's CPU into the next (same mechanism as Timing.timedPasses)
+      // query's CPU into the next (same mechanism as Harness.timedPasses)
       org.apache.spark.GraftSparkShim.drainListenerBus(spark.sparkContext)
-      val c0 = cpuNs.get()
+      val c0 = counters.now.cpuNs
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).count()
@@ -86,7 +76,7 @@ object Bench {
         if (times.get(name).forall(dt < _)) {
           times(name) = dt
           org.apache.spark.GraftSparkShim.drainListenerBus(spark.sparkContext)
-          cpuSecs(name) = (cpuNs.get() - c0) / 1e9
+          cpuSecs(name) = (counters.now.cpuNs - c0) / 1e9
         }
       } catch {
         case e: Throwable =>

@@ -32,7 +32,7 @@ import org.apache.spark.storage.StorageLevel
   *    sites include the iterative loops (CC rounds, BPE merges), whose
   *    correctness depends on actually TRUNCATING lineage — persist
   *    alone would re-serialize a multi-hundred-round chain into every
-  *    task (the measured BpeSoak StackOverflowError), so long
+  *    task (the measured `Soak bpe` StackOverflowError), so long
   *    iterative jobs under `persist` must set
   *    `sparkContext.setCheckpointDir`.
   *    Two documented trades of `persist`: plans are not truncated at

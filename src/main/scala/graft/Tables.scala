@@ -21,7 +21,7 @@ object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     // Timestamp-literal filters (e.g. q01's shipdate bound) only match the
     // DuckDB oracle under a pinned session timezone; every entry point
-    // (Smoke/Verify/Bench/Explain, build.sbt, tests) sets UTC. Fail fast
+    // (through Harness.session, tests too) sets UTC. Fail fast
     // if a new caller forgets, instead of silently shifting date bounds.
     require(spark.conf.get("spark.sql.session.timeZone") == "UTC",
       "graft queries require spark.sql.session.timeZone=UTC " +

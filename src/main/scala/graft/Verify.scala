@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -11,23 +10,9 @@ object Verify {
     val (sfDir, outDir, only) = args match {
       case Array(s, o) => (s, o, None)
       case Array(s, o, n) => (s, o, Some(n.split(",").toSet))
+      case _ => Harness.usage("graft.Verify <sfDir> <outDir> [query,query...]")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Spark 4.1's unionOutputPartitioning makes UnionExec CLAIM its
-      // children's common hash partitioning while still concatenating
-      // their partitions (N+N of them): a downstream sort-merge join
-      // then elides its exchange and zips unequal RDDs — IllegalArgument
-      // "Can't zip RDDs with unequal numbers of partitions", first hit
-      // by q96's verify join on the 30x soak. Disabled everywhere; the
-      // unions that feed joins re-shuffle on their own keys instead.
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

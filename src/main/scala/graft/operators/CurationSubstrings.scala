@@ -235,7 +235,7 @@ private[operators] trait CurationSubstrings {
     * window-explode pass a daily run needs: both reports and the index
     * persistence consume it ([[DailyIngest]] computes it once per day,
     * checkpointed; it was being paid three times, and the window
-    * explode dominates the batch-side index persistence in IngestSoak's
+    * explode dominates the batch-side index persistence in `Soak ingest`'s
     * delta-write leg). */
   def docWindows(docsDf: DataFrame): DataFrame =
     winRows(docsDf).select(col("doc_id"), md5(col("w")).as("wh"))

@@ -302,7 +302,7 @@ object DailyIngest {
     * rebuild == the carried tables when no batch arrived (the
     * compaction==rebuild rule, sem flavor) and the election-churn
     * surface of a refresh ([[VectorQueries.keptChurnOf]] — which
-    * shipped vectors flip when the clusters refresh); LifecycleSoak
+    * shipped vectors flip when the clusters refresh); `Soak lifecycle`
     * wires the drift-triggered example and prices build-vs-carry at
     * scale. Returns the summary (step, n_docs). */
   def rebuildSemantic(spark: SparkSession, indexDir: String,
@@ -610,7 +610,7 @@ object DailyIngest {
 
   // ---- delta index layout (the O(batch)-per-day refinement) ----------
   //
-  // IngestSoak's attribution legs measured the snapshot pipeline's
+  // `Soak ingest`'s attribution legs measured the snapshot pipeline's
   // recurring cost at a 7:1 corpus:batch ratio (10× of sf0.1): gates
   // ≈ 44 s CPU, snapshot compaction ≈ 43 s CPU — HALF the daily bill
   // is rewriting corpus-sized tables (text_sets' shingle arrays

@@ -15,7 +15,7 @@ import graft.Tables
   * that missing write→read path: one `write<Family>` per persisted
   * index, one `daily<Family>` per batch leg that reads the parquet
   * tables and must produce EXACTLY the rows of the corresponding
-  * in-memory oracle query (IndexStoreSpec pins the equality; IndexSoak
+  * in-memory oracle query (IndexStoreSpec pins the equality; `Soak index`
   * measures the build/daily split at 10×/100×).
   *
   * Layout under an index directory (all plain parquet, overwrite mode):
@@ -705,7 +705,7 @@ object IndexStore extends IndexStoreCompaction with IndexStoreCapped {
       .bucketBy(IndexBuckets, "h").sortBy("h").saveAsTable(table)
 
   /** (family name, in-memory qNN twin, write, daily-from-disk) — the one
-    * table IndexSoak and IndexStoreSpec both iterate so the measured
+    * table `Soak index` and IndexStoreSpec both iterate so the measured
     * flow and the pinned invariant can never cover different families. */
   val families: Seq[(String, String,
       (SparkSession, String, String) => Unit,

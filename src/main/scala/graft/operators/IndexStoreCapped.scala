@@ -11,7 +11,7 @@ private[operators] trait IndexStoreCapped {
     * the opt-in response when the q184/q185/q189 occupancy audits flag
     * a hot bucket, priced by the q187/q188/q191 operating curves (the
     * `need ≤ cap` admission rule, BandCapSpec-pinned). The `families`
-    * legs above stay capless/exact and byte-identical; IndexSoak times
+    * legs above stay capless/exact and byte-identical; `Soak index` times
     * these beside them when SPARK_GRAFT_BAND_CAP is set, which is
     * where the PLANS.md capped-vs-exact policy rows come from. */
   val cappedDailies: Map[String,

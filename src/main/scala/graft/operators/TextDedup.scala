@@ -191,7 +191,7 @@ private[operators] trait TextDedup {
   /** [[incrementalNearDups]] with the batch's signature tables supplied
     * by the caller — the DailyIngest flow computes them ONCE per day
     * and reuses them for index persistence (one definition, one
-    * execution; IngestSoak's batch-sigs leg prices the compute).
+    * execution; `Soak ingest`'s batch-sigs leg prices the compute).
     * Contract: `newBands` feeds two subplans (probe + union), so pass
     * a reusable frame (a lazy localCheckpoint); `newSets` is read
     * once. */
@@ -230,7 +230,7 @@ private[operators] trait TextDedup {
     // 2·|candidates|). Without the semi-join the daily pass SHUFFLES
     // the whole corpus sets table for a handful of pairs — O(corpus)
     // recurring cost, the exact thing the persisted index exists to
-    // avoid (measured on the 10× IndexSoak: the sets exchange dominated
+    // avoid (measured on the 10× `Soak index`: the sets exchange dominated
     // the daily leg). The endpoint set broadcasts under AQE, so corpus
     // sets are scan-filtered in place with no corpus-wide exchange.
     val ends = cands

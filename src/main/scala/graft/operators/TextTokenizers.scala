@@ -89,8 +89,8 @@ private[operators] trait TextTokenizers {
 
   /** The trained vocabulary after `rounds` merges: (t, s, n) with `s`
     * the word's final symbol sequence — what [[bpeTokenize]] applies.
-    * private[graft] so [[graft.BpeSoak]] can price realistic merge
-    * counts. */
+    * private[graft] so [[graft.Soak]]'s `bpe` scenario can price
+    * realistic merge counts. */
   private[graft] def bpeVocabAfter(
       docsDf: DataFrame, rounds: Int): DataFrame =
     bpeLoop(docsDf, rounds)._2
@@ -130,7 +130,7 @@ private[operators] trait TextTokenizers {
       out = Some(out.map(_.unionByName(row)).getOrElse(row))
       // LEFT join on the 1-row best pair, not a cross join: once the
       // pair space is EXHAUSTED (every word fully merged — reachable at
-      // realistic merge counts, see BpeSoak) `best` is empty, and a
+      // realistic merge counts, see `Soak bpe`) `best` is empty, and a
       // cross join would silently erase the vocabulary; under the left
       // join pa/pb are null, no position marks, and every word passes
       // through unchanged — training becomes a fixed point, which is
@@ -163,7 +163,7 @@ private[operators] trait TextTokenizers {
             " ELSE array(element_at(s, i)) END)))").as("s"), col("n"))
         // truncate per-round lineage; EAGERLY every 16 rounds — a lazy
         // checkpoint only truncates after its first action, so a long
-        // training run (BpeSoak at 256 merges) otherwise serializes the
+        // training run (`Soak bpe` at 256 merges) otherwise serializes the
         // whole multi-hundred-round RDD chain into each task and dies
         // in a deserialization StackOverflowError (~round 200,
         // measured). Eager every 16 bounds the chain at 16 rounds and

@@ -361,7 +361,7 @@ private[operators] trait VectorAnnTiers {
     // mv binds ONCE per row via the array-wrap idiom (the LLMQueries
     // PERF lesson): inlining it as a lambda operand re-evaluates the
     // 64-element micro transform per (j, d) access — a measured 128×
-    // CPU blowup (Explain'd before/after at sf0.1)
+    // CPU blowup (profiled before/after at sf0.1)
     val proj = e
       .withColumn("S", expr(rpSignsLiteral))
       .withColumn("p", expr(

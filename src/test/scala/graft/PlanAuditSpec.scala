@@ -68,7 +68,7 @@ class PlanAuditSpec extends SparkSpec {
   // without the hint Spark plans a sort-merge semi that re-shuffles the
   // corpus-sized sets/vector table per union child — the exact O(corpus)
   // daily cost the filter exists to remove (measured on the 10×
-  // IndexSoak; Explain-confirmed both ways).
+  // `Soak index`; Profile-confirmed both ways).
   for (name <- Seq("q96_incremental_near_dups",
       "q103_incremental_vector_near_dups", "q104_incremental_semantic_dedup"))
     test(s"$name: endpoint semi-join broadcasts, never sort-merge") {

@@ -6,14 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for the whole test run (one JVM, forked by sbt). */
 object TestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      // see Verify.scala: Spark 4.1 union-partitioning claim crashes SMJ zips
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Harness.session(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

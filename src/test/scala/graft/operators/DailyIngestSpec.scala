@@ -336,7 +336,7 @@ class DailyIngestSpec extends SparkSpec {
   }
 
   test("seven-generation delta chain with mid-chain vacuum == rebuild") {
-    // the full generation-GC lifecycle (GenSoak measures it at N×):
+    // the full generation-GC lifecycle (`Soak gen` measures it at N×):
     // a COLD START over every DeconBatchMod residue — gen-0 seeds an
     // EMPTY corpus, days 0..6 each ingest one residue, a foldDelta
     // vacuum lands after day 3 (gens 0..4 — day 4 is "in flight"),

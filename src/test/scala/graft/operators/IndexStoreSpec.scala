@@ -5,7 +5,7 @@ import java.nio.file.Files
 import graft.{SparkEntry, SparkSpec}
 
 /** The disk-read daily path must equal the in-memory oracle query for
-  * every incremental family — the invariant that makes IndexSoak's
+  * every incremental family — the invariant that makes `Soak index`'s
   * measured build/daily split trustworthy (VERDICT r8 "Next round" #1):
   * if a parquet round-trip changed a type or dropped rows, the measured
   * daily leg would be timing a different computation than the one the

@@ -211,7 +211,7 @@ class ReleaseBuildSpec extends SparkSpec {
     val nDays = CurationQueries.DeconBatchMod
     val allDays = (0 until nDays).toSet
 
-    // 1. the GenSoak shape: cold-start delta chain, one generation per
+    // 1. the `Soak gen` shape: cold-start delta chain, one generation per
     //    day off ONE root (no vacuum — the vacuum equivalence is pinned
     //    in DailyIngestSpec; this test composes THROUGH the release)
     val root = tmp("lc_root")
