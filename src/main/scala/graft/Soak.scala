@@ -241,7 +241,7 @@ object Soak {
     val batch = operators.DailyIngest.split(spark, dataDir)._2
       .transform(graft.Materialize.shared)
     def idx(name: String) =
-      spark.read.parquet(s"$workDir/index/$name.parquet")
+      Tables.read(spark, s"$workDir/index/$name.parquet")
     // the once-per-day batch signature compute the pipeline shares
     // between the near-dup gate and index persistence
     val (rawBands, rawSets) =
@@ -452,8 +452,7 @@ object Soak {
     val embAll = Tables(spark, dataDir, "embeddings")
     val corpusEmb = embAll
       .filter(col("vec_id") % operators.VectorQueries.VecBatchMod =!= 0)
-    val keptIds = spark.read
-      .parquet(s"$workDir/lc_vec0/kept_vectors.parquet")
+    val keptIds = Tables.read(spark, s"$workDir/lc_vec0/kept_vectors.parquet")
       .select(col("vec_id"))
     val universeVecs = corpusEmb.unionByName(
       embAll.join(keptIds, Seq("vec_id"), "left_semi"))
@@ -468,7 +467,7 @@ object Soak {
 
     // the release universe: every day's survivors ∪ the eval holdout
     val ingested = (0 until nDays)
-      .map(d => spark.read.parquet(s"$workDir/lc_out$d/kept_docs.parquet"))
+      .map(d => Tables.read(spark, s"$workDir/lc_out$d/kept_docs.parquet"))
       .reduce(_.unionByName(_))
     val universe = ingested.unionByName(
       Tables(spark, dataDir, "documents").filter(col("doc_id") % 10 === 0))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, TimestampNTZType, TimestampType}
 
@@ -8,7 +9,8 @@ import org.apache.spark.sql.types.{DecimalType, LongType, TimestampNTZType, Time
   *
   * Every query in the engine reads its inputs through [[Tables.apply]] so
   * the scale-factor directory is always a runtime parameter (never
-  * hardcoded), per the driver contract (SURVEY.md §0).
+  * hardcoded), per the driver contract (SURVEY.md §0). Every other
+  * parquet read in the program goes through [[Tables.read]].
   */
 object Tables {
   /** All driver-generated tables: the 8 documented in TESTDATA.md plus
@@ -40,7 +42,7 @@ object Tables {
       val prev = spark.conf.getOption(key)
       spark.conf.set(key, "true")
       try {
-        val raw = spark.read.parquet(s"$dir/$name.parquet")
+        val raw = read(spark, s"$dir/$name.parquet")
         raw.schema("ts").dataType match {
           case LongType =>
             // TIMESTAMP(NANOS) file: raw INT64 nanos. Truncate to micros —
@@ -67,9 +69,22 @@ object Tables {
         }
       }
     } else {
-      spark.read.parquet(s"$dir/$name.parquet")
+      read(spark, s"$dir/$name.parquet")
     }
   }
+
+  /** `spark.read.parquet(path)` without its schema-inference job: the
+    * schema comes from the footer Spark's inference would read, read on
+    * the driver ([[FooterSchema]]), so the plan is the same and building
+    * the frame runs no job. Like `spark.read.parquet`, it lists the
+    * path's files when called. Where the shortcut does not apply
+    * (schema merging on, no footer found) it is `spark.read.parquet`,
+    * errors included. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    FooterSchema.infer(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
 }
 
 /** Helpers that make float aggregates hash-identical between Spark and the

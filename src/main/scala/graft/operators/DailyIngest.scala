@@ -135,7 +135,7 @@ object DailyIngest {
       outDir: String, nextDir: String, ts: String): DataFrame = {
     val m = graft.multimodal.Multimodal
     def idx(name: String): DataFrame =
-      spark.read.parquet(s"$indexDir/$name.parquet")
+      Tables.read(spark, s"$indexDir/$name.parquet")
     // ONE batch decode per modality per daily run: each checkpointed
     // frame feeds its gate AND its compactor (ADVICE r13 — the
     // compactors previously re-decoded the batch payloads)
@@ -230,7 +230,7 @@ object DailyIngest {
       ts: String): DataFrame = {
     val v = VectorQueries
     def idx(name: String): DataFrame =
-      spark.read.parquet(s"$indexDir/$name.parquet")
+      Tables.read(spark, s"$indexDir/$name.parquet")
     val batch = batch0
       .transform(graft.Materialize.shared) // 3 gates + kept join + compactors
     val disposition = v.vectorDispositionOf(batch,
@@ -310,10 +310,10 @@ object DailyIngest {
       ts: String = "1970-01-01T00:00:00Z"): DataFrame = {
     val v = VectorQueries
     def idx(name: String): DataFrame =
-      spark.read.parquet(s"$indexDir/$name.parquet")
+      Tables.read(spark, s"$indexDir/$name.parquet")
     def w(df: DataFrame, name: String): Long = {
       df.write.mode("overwrite").parquet(s"$nextDir/$name.parquet")
-      spark.read.parquet(s"$nextDir/$name.parquet").count()
+      Tables.read(spark, s"$nextDir/$name.parquet").count()
     }
     val emb = universeEmb
       .transform(graft.Materialize.shared) // centroids + vec projection
@@ -335,7 +335,7 @@ object DailyIngest {
         "vec_canon").map(n => s"carried_$n" -> w(idx(n), n)) ++
       Seq("sem_fams", "sem_vecc", "sem_bandsc", "sem_ccc", "sem_statsc")
         .map(n => s"rebuilt_$n" ->
-          spark.read.parquet(s"$nextDir/$n.parquet").count()) ++
+          Tables.read(spark, s"$nextDir/$n.parquet").count()) ++
       Seq(
         "rebuilt_ivf_centroids" -> w(cents, "ivf_centroids"),
         "rebuilt_ivf_cell_stats" -> w(
@@ -500,13 +500,14 @@ object DailyIngest {
     * lazy.
     *
     * Every `idx` read the gates and reports use is constructed first
-    * (each runs a footer-reading job): a parquet read lists its files
-    * when it is constructed, so none can list the generation the delta
-    * persistNext is writing into the same root (that persistNext reads
-    * no index; the snapshot one reads `indexDir`, which nothing writes). The disposition's plan is built
-    * inside its branch: under AQE, building a gate's lazy checkpoint
-    * already runs its shuffle stages. No branch may mutate session conf
-    * (`Tables(…, "events")` does). */
+    * (each lists its files and reads one footer on the driver,
+    * [[graft.Tables.read]]): a parquet read lists its files when it is
+    * constructed, so none can list the generation the delta persistNext
+    * is writing into the same root (that persistNext reads no index; the
+    * snapshot one reads `indexDir`, which nothing writes). The
+    * disposition's plan is built inside its branch: under AQE, building
+    * a gate's lazy checkpoint already runs its shuffle stages. No branch
+    * may mutate session conf (`Tables(…, "events")` does). */
   private def writeDay(spark: SparkSession, batch: DataFrame,
       idx: String => DataFrame, outDir: String, ts: String)(
       persistNext: (DataFrame, DataFrame, DataFrame) => Unit): DataFrame = {
@@ -593,7 +594,7 @@ object DailyIngest {
     val batch = split(spark, dataDir, day, Set(day))._2
       .transform(graft.Materialize.now) // every gate + concurrent writes
     def idx(name: String): DataFrame =
-      spark.read.parquet(s"$indexDir/$name.parquet")
+      Tables.read(spark, s"$indexDir/$name.parquet")
 
     // next-snapshot indexes: merge the BATCH into the read tables —
     // additive/union compaction, never a corpus rescan (the IndexStore
@@ -674,13 +675,13 @@ object DailyIngest {
     * — fold gen ≤ day, exactly like the readers.
     *
     * The eight families fold concurrently ([[graft.Parallel]]), each
-    * read inside its own task (a read runs a footer-reading job, and
-    * nothing writes `rootDir` here); no frame is shared between them,
-    * so none needs materializing. */
+    * read inside its own task (a read lists the family's generations,
+    * and nothing writes `rootDir` here); no frame is shared between
+    * them, so none needs materializing. */
   def foldDelta(spark: SparkSession, rootDir: String,
       outRootDir: String, throughGen: Int = Int.MaxValue): Unit = {
     def folded(name: String): DataFrame = {
-      val gens = spark.read.parquet(s"$rootDir/$name.parquet")
+      val gens = Tables.read(spark, s"$rootDir/$name.parquet")
         .filter(col("gen") <= throughGen).drop("gen")
       name match {
         case "text_hash" | "norm_hash" => gens.distinct()
@@ -706,7 +707,7 @@ object DailyIngest {
     // feed the gates on retry (the batch would self-collide in the
     // exact gate) — the filter is partition pruning, zero read cost
     def idx(name: String): DataFrame =
-      spark.read.parquet(s"$rootDir/$name.parquet")
+      Tables.read(spark, s"$rootDir/$name.parquet")
         .filter(col("gen") <= day).drop("gen")
 
     writeDay(spark, batch, idx, outDir, ts) { (bBands, bSets, bWins) =>

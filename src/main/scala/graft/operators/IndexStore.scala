@@ -48,7 +48,7 @@ object IndexStore extends IndexStoreCompaction with IndexStoreCapped {
     df.write.mode("overwrite").parquet(s"$dir/$name.parquet")
 
   private[operators] def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Tables.read(spark, s"$dir/$name.parquet")
 
   /** The documents table split once per daily run: (corpus, batch). */
   def docSplit(spark: SparkSession, dataDir: String): (DataFrame, DataFrame) = {

@@ -81,7 +81,7 @@ object ReleaseBuild {
 
     def w(df: DataFrame, name: String): Long = {
       df.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
-      spark.read.parquet(s"$outDir/$name.parquet").count()
+      Tables.read(spark, s"$outDir/$name.parquet").count()
     }
     // the asset keep-list (VERDICT r12 "Next round" #4): q130's
     // election over the release universe's assets — unclustered

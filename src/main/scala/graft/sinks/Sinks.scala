@@ -107,7 +107,7 @@ object Sinks {
       .collect().map(_.getInt(0)).sorted
     if (touched.isEmpty) return
     // partition pruning keeps the read to the touched directories
-    val target = spark.read.parquet(targetDir)
+    val target = graft.Tables.read(spark, targetDir)
       .filter(col("bucket").isin(touched.toSeq: _*))
     val merged = target
       .join(withB.select(col(key).as("__dk")), col(key) === col("__dk"),

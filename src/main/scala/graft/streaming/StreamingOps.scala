@@ -694,7 +694,7 @@ object StreamingOps {
         val genDir = newestGenDir(spark, workDir, batchId,
           "DailyIngest.writeIndexes layout")
         def idx(name: String): DataFrame =
-          spark.read.parquet(s"$genDir/$name.parquet")
+          graft.Tables.read(spark, s"$genDir/$name.parquet")
         val b = batch.toDF().transform(graft.Materialize.shared)
         // the micro-batch's MinHash tables feed the near-dup gate AND
         // the compaction — once per micro-batch (the writeDay rule)

@@ -7,7 +7,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Column ↔ Catalyst Expression bridge. Spark 4 made ExpressionUtils
   * `private[sql]`, so extension libraries reach it from a subpackage of
   * org.apache.spark.sql — the usual pattern for Spark-native add-ons.
-  * This is the only file in the repo living outside the graft package.
+  * The repo's other shims (GraftSparkShim, parquet's FooterSchema) follow
+  * it; nothing else lives outside the graft package.
   */
 object ColumnShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -197,6 +197,31 @@ class PlanAuditSpec extends SparkSpec {
       "q93's rank is not (qid, bshard)-sharded")
   }
 
+  // A plain `spark.read.parquet` infers its schema in a one-task Spark
+  // job; `Tables.read` reads the same footer on the driver. Its own
+  // fallback (schema merging, no footer) is the one raw read allowed.
+  test("every parquet read in src/main goes through Tables.read") {
+    val rawRead = """\.read\s*\.(parquet\s*\(|format\s*\(\s*"parquet")""".r
+    val comment = """(?s)/\*.*?\*/|//[^\n]*""".r
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      d.listFiles.toSeq.flatMap(f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val root = new java.io.File("src/main/scala")
+    val files = scalaFiles(root)
+    assert(files.size > 50, s"found only ${files.size} sources under $root")
+    val hits = files.flatMap { f =>
+      val src = comment.replaceAllIn(
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"), "")
+      rawRead.findAllIn(src).map(_ => f.getPath).toSeq
+    }
+    val fallback = "src/main/scala/graft/Tables.scala"
+    assert(hits.contains(fallback), s"no fallback read found in $fallback")
+    assert(hits.diff(Seq(fallback)).isEmpty,
+      "raw parquet reads outside Tables.read's fallback: " +
+        hits.diff(Seq(fallback)).mkString(", "))
+  }
+
   for ((name, fn) <- SparkEntry.queries) {
     test(s"$name: no cartesian product, no unpartitioned window") {
       val plan = fn(spark, sfDir).queryExecution.executedPlan.toString

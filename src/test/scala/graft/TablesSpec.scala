@@ -1,10 +1,131 @@
 package graft
 
-import org.apache.spark.sql.types.TimestampType
+import java.io.File
+import java.nio.file.Files
+
+import org.apache.spark.GraftSparkShim
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
+import org.apache.spark.sql.functions.{col, input_file_name, unix_micros}
+import org.apache.spark.sql.types.{IntegerType, LongType, TimestampType}
 
 class TablesSpec extends SparkSpec {
 
   private val key = "spark.sql.legacy.parquet.nanosAsLong"
+
+  private def tmpDir(prefix: String): File =
+    Files.createTempDirectory(prefix).toFile
+
+  /** What a plan exposes downstream: names, types and nullability of the
+    * schema and of the optimized plan's output (expression ids differ by
+    * construction and are left out). */
+  private def shape(df: DataFrame) =
+    (df.schema, df.queryExecution.optimizedPlan.output
+      .map(a => (a.name, a.dataType, a.nullable)))
+
+  private def assertSameRead(path: String): Unit = {
+    val fast = Tables.read(spark, path)
+    val raw = spark.read.parquet(path)
+    assert(shape(fast) == shape(raw), path)
+  }
+
+  /** Spark jobs `body` runs, counted by the one harness listener. */
+  private def jobsOf(body: => Unit): Long = {
+    val sc = spark.sparkContext
+    val counters = Harness.counters(spark)
+    try {
+      GraftSparkShim.drainListenerBus(sc)
+      val before = counters.now
+      body
+      GraftSparkShim.drainListenerBus(sc)
+      (counters.now - before).jobs
+    } finally sc.removeSparkListener(counters)
+  }
+
+  test("Tables.read plans every driver table exactly like spark.read.parquet") {
+    for (name <- Tables.names) assertSameRead(s"$sfDir/$name.parquet")
+  }
+
+  test("building a table read and asking its schema runs no Spark job") {
+    assert(jobsOf(Tables(spark, sfDir, "orders").schema) == 0)
+    assert(jobsOf(spark.read.parquet(s"$sfDir/orders.parquet").schema) >= 1,
+      "the raw read no longer runs its inference job: the comparison " +
+        "above proves nothing")
+  }
+
+  test("a real TIMESTAMP(NANOS) file infers the same schema under nanosAsLong") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; " +
+        "required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val dir = new File(tmpDir("graft_nanos"), "events.parquet")
+    val writer = ExampleParquetWriter
+      .builder(new Path(new File(dir, "part-0.parquet").getPath))
+      .withType(schema).build()
+    val groups = new SimpleGroupFactory(schema)
+    try for ((id, ts) <- Seq((1L, -1999999999L), (2L, 1500L)))
+      writer.write(groups.newGroup().append("event_id", id).append("ts", ts))
+    finally writer.close()
+    spark.conf.set(key, "true")
+    try {
+      assertSameRead(dir.getPath)
+      assert(Tables.read(spark, dir.getPath).schema("ts").dataType == LongType)
+    } finally spark.conf.unset(key)
+    // and the loader's nanos branch reads it back as floored micros
+    import spark.implicits._
+    val events = Tables(spark, dir.getParent, "events")
+    assert(events.schema("ts").dataType == TimestampType)
+    assert(events.orderBy("event_id").select(unix_micros(col("ts"))).as[Long]
+      .collect().toSeq == Seq(-2000000L, 1L))
+  }
+
+  test("a gen-partitioned directory keeps its partition column and pruning") {
+    import spark.implicits._
+    val root = new File(tmpDir("graft_gens"), "idx.parquet").getPath
+    Seq(1L, 2L).toDF("h").write.parquet(s"$root/gen=0")
+    Seq(3L).toDF("h").write.parquet(s"$root/gen=1")
+    assertSameRead(root)
+    val fast = Tables.read(spark, root)
+    assert(fast.schema("gen").dataType == IntegerType)
+    def filesOf(df: DataFrame): Set[String] =
+      df.filter(col("gen") <= 0).select(input_file_name()).as[String]
+        .collect().toSet
+    val pruned = filesOf(fast)
+    assert(pruned.nonEmpty && pruned.forall(_.contains("/gen=0/")), pruned)
+    assert(pruned == filesOf(spark.read.parquet(root)))
+    assert(fast.filter(col("gen") <= 0).as[(Long, Int)].collect().toSet ==
+      Set((1L, 0), (2L, 0)))
+  }
+
+  test("schema merging falls back to Spark's own inference") {
+    import spark.implicits._
+    val root = new File(tmpDir("graft_merge"), "idx.parquet").getPath
+    Seq(1L).toDF("a").write.parquet(s"$root/gen=0")
+    Seq((2L, "x")).toDF("a", "b").write.parquet(s"$root/gen=1")
+    // without merging both read the first file's footer: no `b`
+    assertSameRead(root)
+    assert(!Tables.read(spark, root).schema.fieldNames.contains("b"))
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try {
+      assert(FooterSchema.infer(spark, root).isEmpty)
+      assertSameRead(root)
+      assert(Tables.read(spark, root).schema.fieldNames.toSeq ==
+        Seq("a", "b", "gen"))
+    } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+  }
+
+  test("an empty or missing path fails exactly like spark.read.parquet") {
+    val empty = tmpDir("graft_empty").getPath
+    for (path <- Seq(empty, s"$empty/missing.parquet")) {
+      val expected = intercept[Exception](spark.read.parquet(path))
+      val got = intercept[Exception](Tables.read(spark, path))
+      assert(got.getClass == expected.getClass, got)
+      assert(got.getMessage == expected.getMessage)
+    }
+  }
 
   test("events read yields a session-zoned timestamp column for any on-disk shape") {
     // the driver has shipped events.ts as both TIMESTAMP(NANOS) and
