@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.functions.Explode
 
 /** Decontamination family (L8/L8b/L53/L74/L77): exact-gram
   * and fuzzy rungs, their incremental daily legs and audits —
@@ -57,8 +58,8 @@ private[operators] trait CurationDecon {
         .select(explode(gramsExpr).as("g")).distinct(), evalCap)
     val trainGrams = docsDf.filter(col("doc_id") % 10 =!= 0)
       .select(col("doc_id"), gramsExpr.as("gs"))
-      .select(col("doc_id"), size(col("gs")).cast("long").as("n_grams"),
-        explode(col("gs")).as("g"))
+      .transform(Explode.values(_, col("gs"), "g", col("doc_id"),
+        size(col("gs")).cast("long").as("n_grams")))
     trainGrams
       .join(broadcast(evalGrams), Seq("g"))
       // gs is distinct per doc, so matching rows are unique (doc_id, g)
@@ -96,8 +97,8 @@ private[operators] trait CurationDecon {
       evalCap: Long = EvalGramBroadcastCap): DataFrame =
     newDocs
       .select(col("doc_id"), gramsExpr.as("gs"))
-      .select(col("doc_id"), size(col("gs")).cast("long").as("n_grams"),
-        explode(col("gs")).as("g"))
+      .transform(Explode.values(_, col("gs"), "g", col("doc_id"),
+        size(col("gs")).cast("long").as("n_grams")))
       .join(broadcast(guardedEvalGrams(evalGrams, evalCap)), Seq("g"))
       .groupBy(col("doc_id"), col("n_grams"))
       .agg(count(lit(1)).as("n_contaminated"))
@@ -255,8 +256,7 @@ private[operators] trait CurationDecon {
       .select(col("doc_id").as("eval_id"), gramsExpr.as("gs"))
       .select(col("eval_id"), size(col("gs")).cast("long")
         .as("n_eval_grams"), col("gs"))
-    val evalG = evalDocs
-      .select(col("eval_id"), explode(col("gs")).as("g"))
+    val evalG = Explode.values(evalDocs, col("gs"), "g", col("eval_id"))
     val trainG = docsDf.filter(col("doc_id") % 10 =!= 0)
       .select(col("doc_id"), explode(gramsExpr).as("g"))
     val hits = trainG.join(broadcast(evalG), Seq("g"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.functions.Explode
 
 /** Counting-LM family (L18/L41/L68/L71): add-one and Kneser-Ney
   * bigram models, fluency scoring, NLL bucketing and the incremental
@@ -57,7 +58,8 @@ private[operators] trait CurationLm {
     // vocab from the UNfiltered reference slice — the oracle counts a
     // 1-word ref doc's token in V even though it yields no bigram
     val vocab = allWords.filter(col("doc_id") % 10 === 0)
-      .select(explode(col("w")).as("t")).agg(count_distinct(col("t")).as("v"))
+      .transform(Explode.values(_, col("w"), "t"))
+      .agg(count_distinct(col("t")).as("v"))
     wordsArr.filter(col("doc_id") % 10 =!= 0)
       .select(col("doc_id"), explode(biExpr).as("b"))
       .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
@@ -205,7 +207,7 @@ private[operators] trait CurationLm {
     // rule) collapse to one broadcast row
     val scalars = refBi.agg(count(lit(1)).as("bt")).crossJoin(
       allWords.filter(col("doc_id") % 10 === 0)
-        .select(explode(col("w")).as("t"))
+        .transform(Explode.values(_, col("w"), "t"))
         .agg(count_distinct(col("t")).as("v")))
     wordsArr.filter(col("doc_id") % 10 =!= 0)
       .select(col("doc_id"), explode(biExpr).as("b"))

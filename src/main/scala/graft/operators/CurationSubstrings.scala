@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.Explode
 
 /** SEGMENT / SUBSTRING dedup + rewrite family (L22/L23/L30/L47/L57):
   * segment-level dedup and its incremental leg, boilerplate removal,
@@ -21,9 +22,8 @@ private[operators] trait CurationSubstrings {
   private[operators] def segRows(docsDf: DataFrame): DataFrame =
     docsDf
       .select(col("doc_id"), segArrExpr.as("sl"))
-      .select(col("doc_id"), size(col("sl")).cast("long").as("n_segs"),
-        posexplode(col("sl")))
-      .toDF("doc_id", "n_segs", "pos", "seg")
+      .transform(Explode.positions(_, col("sl"), "pos", "seg", col("doc_id"),
+        size(col("sl")).cast("long").as("n_segs")))
 
   /** Reassemble docs from their surviving segment occurrences: count +
     * in-order concat via conditional aggregation, so docs whose EVERY
@@ -107,9 +107,8 @@ private[operators] trait CurationSubstrings {
     // source rides through the explode — no join back to the docs table
     val segs = docsDf
       .select(col("doc_id"), col("source"), segArrExpr.as("sl"))
-      .select(col("doc_id"), col("source"),
-        size(col("sl")).cast("long").as("n_segs"), posexplode(col("sl")))
-      .toDF("doc_id", "source", "n_segs", "pos", "seg")
+      .transform(Explode.positions(_, col("sl"), "pos", "seg", col("doc_id"),
+        col("source"), size(col("sl")).cast("long").as("n_segs")))
     val bp = segs.groupBy(col("source"), col("seg"))
       .agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= BoilerplateMinDocs)
@@ -201,8 +200,7 @@ private[operators] trait CurationSubstrings {
       .select(col("doc_id"),
         explode(expr(s"sequence(pos, pos + ${DupWinWords - 1})")).as("wp"))
       .distinct()
-    words
-      .select(col("doc_id"), posexplode(col("wa")).as(Seq("wp", "word")))
+    Explode.positions(words, col("wa"), "wp", "word", col("doc_id"))
       .join(covered.withColumn("cov", lit(1)), Seq("doc_id", "wp"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.functions.Explode
 import scala.collection.immutable.ListMap
 
 /** LLM-training-data pipeline operators over `documents` (SURVEY.md §2.9):
@@ -207,7 +208,8 @@ object LLMQueries extends TextDedup
            |    i -> array_join(
            |      slice(w, i * $MixSegWords + 1, $MixSegWords), ' ')))[0]
            |""".stripMargin).as("segarr"))
-      .select(col("doc_id"), col("lang"), explode(col("segarr")).as("t"))
+      .transform(Explode.values(_, col("segarr"), "t", col("doc_id"),
+        col("lang")))
     val perPred = segs
       .select(Seq(col("doc_id"), col("lang")) ++ langScoreCols: _*)
       .withColumn("pred", expr(langPredSql))

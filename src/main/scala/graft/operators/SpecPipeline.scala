@@ -114,7 +114,11 @@ object SpecPipeline {
     resultLines(spark, dir)
       .withColumn("r", from_json(col("line"), resultSchema))
       .select(col("k"), col("prio"),
-        col("r.custom_id").as("custom_id"),
+        // non-nullable join key: for a nullable one q10's join infers an
+        // isnotnull filter, which pushdown rewrites to the whole to_json →
+        // from_json round-trip and runs in the one-task scan stage before
+        // Scale.byKey's exchange. Exact: no target id is empty.
+        coalesce(col("r.custom_id"), lit("")).as("custom_id"),
         col("r.error").isNotNull.as("is_err"),
         expr("try_element_at(r.response.body.choices, 1)")
           .getField("message").getField("content").as("content"))
@@ -232,34 +236,25 @@ object SpecPipeline {
     // single pass over the file: parse once, classify with one CASE chain
     // (a branch-per-frame union would re-run the scan + parse + global
     // line-number window once per error class — measured 4×+ the cost).
-    // The trailing repartition MATERIALIZES the parsed frame: its two
-    // consumers (the expected-model aggregate and the classification
-    // join) then share one exchange (ReusedExchange). Without it, each
-    // consumer re-ran scan → line-number window → to_json → from_json,
-    // and worse, CollapseProject inlined the round-trip into the
-    // aggregate leg's !is_corrupt Filter condition — 3 serializations +
-    // 2 parses per row in ONE expression (the same optimizer failure
-    // mode as the shingle lambda note in LLMQueries). Measured 2.1× on
-    // the query; the narrow 6-column shuffle it buys is noise.
-    val parsed = requestLines(spark, dir)
+    // Materialized eagerly: two concurrent consumers (the expected-model
+    // broadcast and the classification join). Lazily, column pruning
+    // gives each consumer its own subtree, so each re-ran the line-number
+    // window → to_json → from_json; a lazy checkpoint read by the two
+    // racing stages can still compute twice (Materialize scaladoc).
+    val parsed = graft.Materialize.now(requestLines(spark, dir)
       .withColumn("r", from_json(col("line"), requestSchema,
         Map("mode" -> "PERMISSIVE",
           "columnNameOfCorruptRecord" -> "_corrupt_record")))
-      .select(col("k"), col("line_no"),
+      .select(col("line_no"),
         col("r._corrupt_record").isNotNull.as("is_corrupt"),
         col("r.custom_id").as("custom_id"),
         col("r.method").as("method"),
-        col("r.body.model").as("model"))
-      .transform(graft.Scale.byKey(_, col("line_no")))
+        col("r.body.model").as("model")))
 
     // A1: the expected model is the FIRST line's (README.md:61) — a 1-row
     // aggregate broadcast back across the file. Corrupt lines are
-    // excluded INSIDE the aggregate (null ordering keys are skipped by
-    // min_by in Spark and arg_min in DuckDB alike) rather than with a
-    // .filter: a filter here would be pushed below the repartition
-    // exchange, break subtree identity with the classification leg, and
-    // resurrect the duplicated JSON round-trip the exchange exists to
-    // prevent.
+    // excluded inside the aggregate: min_by skips null ordering keys, as
+    // DuckDB's arg_min does.
     val expected = parsed
       .agg(min_by(col("model"),
         when(!col("is_corrupt"), col("line_no"))).as("expected_model"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.functions.Explode
 
 /** Tokenizer family (L20/L20d/L35): BPE pair counts, the unrolled
   * merge-training loop, tokenization with a trained vocab, fertility,
@@ -270,7 +271,7 @@ private[operators] trait TextTokenizers {
         s"i -> concat_ws(' ', slice(w, i * $ChunkStride + 1, " +
         s"$ChunkTokens))))[0]")
     d.select(col("doc_id"), chunksExpr.as("cl"))
-      .select(col("doc_id"), posexplode(col("cl")))
+      .transform(Explode.positions(_, col("cl"), "pos", "col", col("doc_id")))
       .select(col("doc_id"), col("pos").cast("long").as("chunk_idx"),
         size(split(col("col"), "\\s+")).cast("long").as("n_tokens"),
         col("col").as("chunk_text"))

@@ -30,6 +30,37 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  // Catalyst infers `isnotnull(key)` from an equi-join and
+  // `size(arr) > 0 AND isnotnull(arr)` from a non-outer explode of an
+  // attribute, replaces the attribute with the expression it aliases and
+  // pushes the filter through Scale.byKey's exchange into the one-task
+  // scan stage. A JSON round-trip or an n-gram lambda then runs twice per
+  // row, the first time single-threaded. Returns each such Filter's
+  // offending part. (to_json plans as a StructsToJsonEvaluator invoke.)
+  private def heavyInferredFilters(plan: String): Seq[String] = {
+    val heavy = Seq("lambdafunction", "from_json", "to_json",
+      "StructsToJsonEvaluator")
+    // `size(...)` in line l starting at `from`, up to its closing paren
+    def sizeCall(l: String, from: Int): String = {
+      var depth = 0
+      var i = from + "size".length
+      do {
+        if (l(i) == '(') depth += 1 else if (l(i) == ')') depth -= 1
+        i += 1
+      } while (depth > 0 && i < l.length)
+      l.substring(from, i)
+    }
+    plan.linesIterator.filter(_.contains("Filter ")).toSeq.flatMap { l =>
+      val nullCheck = Seq("isnotnull(from_json(").filter(l.contains)
+      val sizes = """size\(""".r.findAllMatchIn(l)
+        .map(m => (m.start, sizeCall(l, m.start)))
+        .collect { case (at, call)
+          if l.startsWith(" > 0", at + call.length) &&
+            heavy.exists(call.contains) => call }
+      nullCheck ++ sizes
+    }
+  }
+
   // q23 is the DELIBERATE single-reducer demo (ntile/percent_rank over an
   // unpartitioned window, documented with its scale alternative in
   // WindowQueries.acctbalQuartiles). Every other query must stay clean.
@@ -222,9 +253,27 @@ class PlanAuditSpec extends SparkSpec {
         hits.diff(Seq(fallback)).mkString(", "))
   }
 
+  test("heavy inferred filters: found in a plan line, cheap ones pass") {
+    val json = "Filter isnotnull(from_json(StructField(custom_id,StringType,true), line#3))"
+    assert(heavyInferredFilters(json) == Seq("isnotnull(from_json("))
+    val grams = "+- Filter ((size(array_distinct(transform(split(text#1, \\s+, -1), " +
+      "lambdafunction(x#2, x#2, false))), false) > 0) AND isnotnull(doc_id#0L))"
+    assert(heavyInferredFilters(grams).map(_.take(20)) == Seq("size(array_distinct("))
+    assert(heavyInferredFilters(
+      "Filter ((size(split(text#1, \\s+, -1), false) > 0) AND isnotnull(x#2))").isEmpty)
+    assert(heavyInferredFilters("Filter (size(transform(a#1, " +
+      "lambdafunction(x#2, x#2, false)), false) >= 2)").isEmpty)
+    assert(heavyInferredFilters("Project [from_json(line#1) AS r#2]").isEmpty)
+  }
+
   for ((name, fn) <- SparkEntry.queries) {
     test(s"$name: no cartesian product, no unpartitioned window") {
       val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
+      val heavyFilters = heavyInferredFilters(plan)
+      assert(heavyFilters.isEmpty,
+        s"$name evaluates a heavy expression in an inferred Filter, " +
+          "which runs it twice and the first time in the scan stage: " +
+          heavyFilters.mkString(" | "))
       assert(!plan.contains("CartesianProduct"),
         s"$name plans a CartesianProduct — unguarded O(n·m) join")
       if (!windowWhitelist(name))
