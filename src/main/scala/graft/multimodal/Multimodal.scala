@@ -207,16 +207,6 @@ object Multimodal extends MediaBands
       counts.map(_ / n)
     }
 
-    /** "Resize" = stride-decimate the payload bytes by the scale factor
-      * (a real image library would resample pixels; the contract — payload
-      * in, smaller payload + updated dimensions out — is identical). */
-    def resize(payload: Array[Byte], scale: Int): Array[Byte] = {
-      val out = new Array[Byte]((payload.length + scale - 1) / scale)
-      var i = 0
-      while (i < out.length) { out(i) = payload(i * scale); i += 1 }
-      out
-    }
-
     /** Perceptual hash, dHash-style (public: difference hash over a
       * resampled grayscale grid): the REAL pipeline decodes the payload
       * and compares adjacent cells of an 8×8 luminance grid; the fake
@@ -339,36 +329,6 @@ object Multimodal extends MediaBands
         MediaFeatures(r.doc_id, r.kind, r.payload.length.toLong,
           FakeCodec.features(dec.decode(r.payload)))
       }
-    }
-  }
-
-  /** Resize the image rows by an integer scale factor, partition-wise:
-    * payload shrinks, width/height metadata update together — the
-    * payload-in/payload-out narrow-map shape a real resampler plugs into.
-    * Non-image rows pass through untouched. */
-  def resizeImages(media: Dataset[MediaRow], scale: Int = 2): Dataset[MediaRow] = {
-    import media.sparkSession.implicits._
-    require(scale >= 1, s"scale must be >= 1, got $scale")
-    media.mapPartitions { rows =>
-      // per-partition setup would construct the real resampler here, once
-      rows.map { r =>
-        if (r.kind != "image") r
-        else r.copy(
-          payload = FakeCodec.resize(r.payload, scale),
-          width = (r.width + scale - 1) / scale,
-          height = (r.height + scale - 1) / scale)
-      }
-    }
-  }
-
-  /** Frame-sample the video rows: 1 row → k frame rows (flatMap batch
-    * shape), payload column dropped from the output rows' parents. */
-  def sampleVideoFrames(media: Dataset[MediaRow], every: Int = 64,
-      frameLen: Int = 16): Dataset[Frame] = {
-    import media.sparkSession.implicits._
-    media.filter(_.kind == "video").mapPartitions { rows =>
-      rows.flatMap(r => FakeCodec.sampleFrames(r.doc_id, r.payload,
-        every, frameLen))
     }
   }
 

@@ -623,9 +623,7 @@ object DailyIngest {
   // replayed day overwrites its own generation (idempotent, the same
   // per-partition-overwrite contract the continuousIngest twin uses
   // for its outputs). This is the hand-rolled form of what a
-  // transactional table format (Delta/Iceberg) provides at 100 TB;
-  // the IndexStore bucketed text-exact family models the same move
-  // for catalog tables.
+  // transactional table format (Delta/Iceberg) provides at 100 TB.
   //
   // Readers tolerate the layout by construction: hash anti-joins are
   // unaffected by a key appearing in several generations; bands/sets

@@ -662,48 +662,6 @@ object IndexStore extends IndexStoreCompaction with IndexStoreCapped {
         .filter(col("doc_id") % 10 =!= 0 &&
           col("doc_id") % CurationQueries.DeconBatchMod === 0))
 
-  // ---- bucketed index layout (the 100 TB refinement) -------------------
-  //
-  // The compaction table (PLANS.md) shows the distinct-set families'
-  // remaining cost is the index's own key shuffle + full rewrite. A
-  // BUCKETED catalog layout (sinks/Bucketing — bucketBy on the key at
-  // write time) removes both: the daily anti-join satisfies the index
-  // side's ClusteredDistribution straight off the scan, so the ONLY
-  // Exchange in the daily plan is the batch side's (O(batch)); and
-  // compaction becomes an APPEND of corpus-unseen keys under the same
-  // bucket spec — a delta write with the layout retained, instead of
-  // the full-index rewrite the parquet-path compactor pays. Modeled on
-  // the text-exact family; the same trio applies to any distinct-key
-  // index (segments/vec_hash/norm_hash). IndexStoreSpec pins the plan
-  // shape (one Exchange, batch side) and append==rebuild equality.
-
-  /** Hash-bucket count for bucketed index tables — sized so one bucket
-    * ≈ one task's rows at the target SF (buckets are fixed at write
-    * time; production picks ~corpus/128 MB). */
-  val IndexBuckets = 8
-
-  def writeTextExactBucketed(spark: SparkSession, dataDir: String,
-      table: String): Unit =
-    graft.sinks.Bucketing.writeBucketed(
-      LLMQueries.hashIndex(docSplit(spark, dataDir)._1), table, "h",
-      IndexBuckets)
-
-  /** q97's daily leg against the bucketed index — row-identical to
-    * [[dailyTextExact]]; only the plan shape differs. */
-  def dailyTextExactBucketed(spark: SparkSession, table: String,
-      dataDir: String): DataFrame =
-    LLMQueries.incrementalExactDedup(spark.table(table),
-      docSplit(spark, dataDir)._2)
-
-  /** Append-only compaction: corpus-UNSEEN batch keys append under the
-    * same bucket spec; the existing files never rewrite. */
-  def compactTextExactBucketed(spark: SparkSession, table: String,
-      dataDir: String): Unit =
-    LLMQueries.hashIndex(docSplit(spark, dataDir)._2)
-      .join(spark.table(table), Seq("h"), "left_anti")
-      .write.mode(org.apache.spark.sql.SaveMode.Append).format("parquet")
-      .bucketBy(IndexBuckets, "h").sortBy("h").saveAsTable(table)
-
   /** (family name, in-memory qNN twin, write, daily-from-disk) — the one
     * table `Soak index` and IndexStoreSpec both iterate so the measured
     * flow and the pinned invariant can never cover different families. */

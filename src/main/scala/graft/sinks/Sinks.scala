@@ -11,10 +11,7 @@ import scala.util.control.NonFatal
   * There is no Delta/Iceberg offline (`build.sbt` — only /opt/spark/jars),
   * so the upsert sink (S6) is a join-based merge + atomic directory swap:
   * write the merged table to a fresh `<target>.tmp-swap`, then move it over
-  * the old directory. At 100 TB the same merge narrows to partition
-  * overwrite — hash-bucket the target by key and rewrite only the buckets
-  * the delta touches (SURVEY.md §4.3); the swap mechanics stay identical
-  * per bucket.
+  * the old directory.
   */
 object Sinks {
 
@@ -42,19 +39,11 @@ object Sinks {
     * error file's lines as WARN-leveled structured log rows, ready for
     * [[writeLogs]]. Line-granular, schema {level, event, message}.
     */
-  def readErrorFile(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.spark.sql.functions._
+  def readErrorFile(spark: SparkSession, path: String): DataFrame =
     spark.read.text(path)
       .select(lit("WARN").as("level"),
         lit("openai_error_file_line").as("event"),
         col("value").as("message"))
-  }
-
-  /** L7: language-partitioned write — documents laid out by lang so a
-    * per-language pipeline prunes partitions at the scan.
-    */
-  def writePartitionedByLang(rows: DataFrame, dir: String): Unit =
-    rows.write.mode(SaveMode.Overwrite).partitionBy("lang").parquet(dir)
 
   /** S6: document upsert (README.md:77,100-102). `merged` must be the full
     * post-merge table (e.g. [[graft.operators.StateMachine.mergeLedger]]'s
@@ -74,63 +63,6 @@ object Sinks {
     deleteRecursive(old)
   }
 
-  /** S6 at scale: lay the target out hash-bucketed by `key` (directory
-    * partition `bucket=NN`), so an upsert only rewrites the buckets its
-    * delta touches. [[bucketedUpsert]] below is the merge that exploits
-    * this layout.
-    */
-  def writeBucketed(rows: DataFrame, dir: String, key: String,
-      numBuckets: Int): Unit =
-    rows.withColumn("bucket", pmod(hash(col(key)), lit(numBuckets)))
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(dir)
-
-  /** S6 at scale: bucket-pruned upsert (SURVEY.md §4.3 — "hash-bucket the
-    * target by key; merge only touched buckets"). Delta rows replace
-    * target rows with the same `key`; buckets the delta does not touch
-    * are never read OR rewritten — their files stay byte-identical on
-    * disk. At 100 TB with 10k buckets, a delta touching 1% of keys reads
-    * and writes ~1% of the table instead of all of it.
-    *
-    * Each touched `bucket=NN` directory is swapped atomically; there is
-    * no cross-bucket transaction (that is what a table format like
-    * Delta/Iceberg adds — unavailable offline, SURVEY.md §4.3), so a
-    * reader concurrent with the swap can see bucket versions from two
-    * generations. The replay test in SinksSpec shows the merge is
-    * idempotent, which is what makes that window recoverable.
-    */
-  def bucketedUpsert(spark: SparkSession, targetDir: String,
-      delta: DataFrame, key: String, numBuckets: Int): Unit = {
-    val withB = delta.withColumn("bucket",
-      pmod(hash(col(key)), lit(numBuckets)))
-    // metadata-scale collect: one bucket id per touched bucket, ≤ numBuckets
-    val touched = withB.select(col("bucket")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    if (touched.isEmpty) return
-    // partition pruning keeps the read to the touched directories
-    val target = graft.Tables.read(spark, targetDir)
-      .filter(col("bucket").isin(touched.toSeq: _*))
-    val merged = target
-      .join(withB.select(col(key).as("__dk")), col(key) === col("__dk"),
-        "left_anti")                       // keep target rows the delta
-      .unionByName(withB)                  // doesn't replace; delta wins
-    val tmp = targetDir + ".tmp-upsert"
-    deleteRecursive(Paths.get(tmp))
-    merged.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(tmp)
-    for (b <- touched) {
-      val src = Paths.get(tmp, s"bucket=$b")
-      val dst = Paths.get(targetDir, s"bucket=$b")
-      val old = Paths.get(targetDir, s"bucket=$b.tmp-old")
-      deleteRecursive(old)
-      if (Files.exists(dst)) Files.move(dst, old,
-        StandardCopyOption.ATOMIC_MOVE)
-      // a touched bucket can be delta-only (new keys): tmp always has the
-      // directory because every delta row lands in a touched bucket
-      Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
-      deleteRecursive(old)
-    }
-    deleteRecursive(Paths.get(tmp))
-  }
-
   private def deleteRecursive(p: Path): Unit =
     if (Files.exists(p)) {
       Files.walk(p).sorted(Comparator.reverseOrder[Path]())
@@ -147,6 +79,7 @@ object Sinks {
 object Retry {
   def withBackoff[A](maxAttempts: Int = 3, baseDelayMs: Long = 100,
       sleep: Long => Unit = Thread.sleep)(op: () => A): A = {
+    require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
     var attempt = 0
     var last: Throwable = null
     while (attempt < maxAttempts) {

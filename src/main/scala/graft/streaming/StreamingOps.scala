@@ -654,7 +654,7 @@ object StreamingOps {
     * reads the newest generation ≤ N and OVERWRITES its own outputs —
     * a replayed uncommitted batch (the foreachBatch at-least-once
     * contract) rewrites generation N+1 from the same inputs, so the
-    * flow is idempotent exactly like the bucketed-ledger upsert twin.
+    * flow is idempotent.
     *
     * Scale posture: per micro-batch cost is the O(batch) daily cost
     * DailyIngest already measures — every gate reads the batch plus a

@@ -1,10 +1,14 @@
 package org.apache.spark
 
-/** Core-side shim (same pattern as sql/graftshim/ColumnShim): the async
-  * listener bus and its waitUntilEmpty are `private[spark]`, and a timed
-  * harness that reads listener-accumulated task metrics needs a real
-  * drain — a fixed sleep lets late task-end events leak into the next
-  * measurement window under load.
+/** Core-side shim (same pattern as sql/graftshim/ColumnShim) over two
+  * `private[spark]` members of SparkContext:
+  *
+  *  - the async listener bus's waitUntilEmpty: `Harness` and `Bench` read
+  *    listener-accumulated task metrics and need a real drain — a fixed
+  *    sleep lets late task-end events leak into the next measurement
+  *    window under load;
+  *  - the checkpoint dir, which has a set-only public API: MaterializeSpec
+  *    unsets it to restore the shared test session.
   */
 object GraftSparkShim {
   /** Block until the listener bus has delivered all queued events (or

@@ -64,15 +64,6 @@ class CosineSimilaritySpec extends SparkSpec {
     assert(out.head == 5.0)
   }
 
-  test("extension registration exposes cosine_sim and l2_sq in SQL") {
-    graft.GraftExtensions.registerAll(spark)
-    val out = spark.sql(
-      "SELECT cosine_sim(array(1D, 0D), array(2D, 0D)) AS c, " +
-        "l2_sq(array(1D, 2D), array(2D, 0D)) AS d")
-      .as[(Double, Double)].collect().head
-    assert(out == ((1.0, 5.0)))
-  }
-
   test("interpreted mode (codegen off) agrees with codegen") {
     val before = spark.conf.getOption("spark.sql.codegen.wholeStage")
     try {

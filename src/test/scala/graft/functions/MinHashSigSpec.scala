@@ -98,8 +98,6 @@ class MinHashSigSpec extends SparkSpec {
         java.lang.reflect.Modifier.isStatic(m.getModifiers))
     assert(hasStatic(classOf[MinHashBandKeys], "kernel"),
       "MinHashBandKeys.kernel lost its static forwarder")
-    assert(hasStatic(classOf[CompressionRatio], "ratio"),
-      "CompressionRatio.ratio lost its static forwarder")
     assert(hasStatic(classOf[JsonTokenKind], "kindAt") &&
       hasStatic(classOf[JsonTokenKind], "elementKindsAt"),
       "JsonTokenKind kernels lost their static forwarders")

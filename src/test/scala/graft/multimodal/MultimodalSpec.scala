@@ -35,45 +35,6 @@ class MultimodalSpec extends SparkSpec {
     assert(out.count() == media.count())
   }
 
-  test("frame sampling fans one video row out to its stride count") {
-    val videos = media.filter(_.kind == "video").collect()
-    val frames = Multimodal.sampleVideoFrames(media, every = 64,
-      frameLen = 16).collect()
-    val expected = videos.map(v =>
-      (v.payload.length + 63) / 64).sum
-    assert(frames.length == expected)
-    assert(frames.forall(_.frame_bytes.length <= 16))
-    // offsets are the stride grid
-    frames.groupBy(_.doc_id).values.foreach { fs =>
-      assert(fs.sortBy(_.frame_no).zipWithIndex.forall {
-        case (f, i) => f.frame_no == i && f.offset_bytes == i * 64L
-      })
-    }
-  }
-
-  test("resize shrinks image payloads and dimensions together") {
-    val before = media.filter(_.kind == "image").collect()
-      .map(r => r.doc_id -> r).toMap
-    val resized = Multimodal.resizeImages(media, scale = 4).collect()
-    resized.foreach { r =>
-      before.get(r.doc_id) match {
-        case Some(orig) => // image: decimated payload, scaled metadata
-          assert(r.payload.length == (orig.payload.length + 3) / 4)
-          assert(r.width == (orig.width + 3) / 4)
-          assert(r.height == (orig.height + 3) / 4)
-          // stride decimation keeps every 4th byte
-          assert(r.payload.toSeq ==
-            orig.payload.grouped(4).map(_.head).toSeq)
-        case None => () // non-image rows pass through
-      }
-    }
-    assert(resized.length == media.count())
-    // non-image rows untouched
-    val audio = media.filter(_.kind == "audio").head()
-    val audioAfter = resized.find(_.doc_id == audio.doc_id).get
-    assert(audioAfter.payload.toSeq == audio.payload.toSeq)
-  }
-
   test("feature summary aggregates without re-reading payloads") {
     val sum = Multimodal.featureSummary(spark, sfDir).collect()
     assert(sum.map(_.getString(0)).toSet == Set("image", "audio", "video"))

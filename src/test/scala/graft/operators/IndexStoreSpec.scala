@@ -28,50 +28,6 @@ class IndexStoreSpec extends SparkSpec {
       assert(fromDisk == inMemory)
     }
 
-  test("bucketed hash index: one Exchange daily, append == rebuild") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    def shuffles(plan: SparkPlan): Int = {
-      val resolved = plan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
-      resolved.collect { case _: ShuffleExchangeExec => 1 }.sum
-    }
-    IndexStore.writeTextExactBucketed(spark, sfDir, "graft_hash_idx")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-      val daily = IndexStore.dailyTextExactBucketed(spark,
-        "graft_hash_idx", sfDir)
-      // row-identical to the parquet-path daily (== the q97 twin)
-      val want = SparkEntry.queries("q97_incremental_exact_dedup")(
-        spark, sfDir).collect().toSeq
-      assert(daily.collect().toSeq == want)
-      // only the batch side may exchange: the index side's clustering
-      // comes off the bucketed scan
-      daily.count()
-      val n = shuffles(daily.queryExecution.executedPlan)
-      assert(n <= 2, // batch agg + its join alignment; never the index
-        s"bucketed daily plans $n shuffles:\n" +
-          daily.queryExecution.executedPlan)
-      val plain = IndexStore.dailyTextExact(spark, indexDir, sfDir)
-      plain.count()
-      assert(shuffles(plain.queryExecution.executedPlan) > n,
-        "parquet-path daily should shuffle the index side too")
-      // append-only compaction equals a rebuild over (corpus ∪ batch)
-      IndexStore.compactTextExactBucketed(spark, "graft_hash_idx", sfDir)
-      val (c, b) = IndexStore.docSplit(spark, sfDir)
-      val rebuilt = graft.operators.LLMQueries.hashIndex(c.unionByName(b))
-      val got = spark.table("graft_hash_idx")
-      assert(got.count() == rebuilt.count())
-      assert(got.distinct().count() == got.count(), "duplicate keys")
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS graft_hash_idx")
-    }
-  }
-
   // Compaction (the third lifecycle leg): merging the batch into the
   // persisted index must equal a full rebuild over (corpus ∪ batch),
   // table for table — otherwise tomorrow's snapshot quietly diverges

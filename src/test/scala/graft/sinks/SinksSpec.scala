@@ -50,21 +50,6 @@ class SinksSpec extends SparkSpec {
     assert(rows.map(_._3).toSet.contains("plain text line"))
   }
 
-  test("language-partitioned write prunes by lang directory") {
-    val dir = tmpDir("bylang")
-    val docs = Seq((1L, "hello", "en"), (2L, "hallo", "de"))
-      .toDF("doc_id", "text", "lang")
-    Sinks.writePartitionedByLang(docs, dir)
-    val dirs = new java.io.File(dir).listFiles().map(_.getName)
-      .filter(_.startsWith("lang=")).toSet
-    assert(dirs == Set("lang=en", "lang=de"))
-    // partition-pruned read touches only the one directory
-    val en = spark.read.parquet(dir).filter($"lang" === "en")
-    assert(en.count() == 1)
-    val scan = en.queryExecution.executedPlan.toString
-    assert(!scan.contains("lang=de") || en.inputFiles.forall(_.contains("lang=en")))
-  }
-
   test("retry succeeds after transient failures") {
     var calls = 0
     val slept = scala.collection.mutable.ArrayBuffer[Long]()
@@ -86,6 +71,14 @@ class SinksSpec extends SparkSpec {
       }
     }
     assert(calls == 3 && ex.getMessage == "boom 3")
+    // zero attempts is a misconfiguration: fail loud, never a null throw
+    calls = 0
+    val bad = intercept[IllegalArgumentException] {
+      Retry.withBackoff(maxAttempts = 0, baseDelayMs = 1, sleep = _ => ()) {
+        () => calls += 1; "unreached"
+      }
+    }
+    assert(calls == 0 && bad.getMessage.contains("maxAttempts"))
   }
 
   test("retry propagates a fatal error on its first attempt, unslept") {
@@ -98,84 +91,5 @@ class SinksSpec extends SparkSpec {
       }
     }
     assert(calls == 1 && slept.isEmpty)
-  }
-
-  // --- bucketed upsert (S6 at scale) ---------------------------------
-
-  private def bucketFiles(dir: String): Map[String, Set[(String, Long)]] = {
-    val root = new java.io.File(dir)
-    root.listFiles().filter(_.getName.startsWith("bucket="))
-      .map(d => d.getName ->
-        d.listFiles().filter(_.getName.endsWith(".parquet"))
-          .map(f => (f.getName, f.lastModified())).toSet)
-      .toMap
-  }
-
-  test("bucketedUpsert replaces matched keys, keeps the rest, adds new") {
-    val dir = tmpDir("bupsert")
-    val base = (1L to 100L).map(i => (i, s"v$i")).toDF("id", "v")
-    Sinks.writeBucketed(base, dir, "id", numBuckets = 8)
-    val delta = Seq((7L, "NEW7"), (42L, "NEW42"), (101L, "NEW101"))
-      .toDF("id", "v")
-    Sinks.bucketedUpsert(spark, dir, delta, "id", numBuckets = 8)
-    val back = spark.read.parquet(dir).select("id", "v")
-      .as[(Long, String)].collect().toMap
-    assert(back.size == 101)
-    assert(back(7L) == "NEW7" && back(42L) == "NEW42" &&
-      back(101L) == "NEW101")
-    assert(back(8L) == "v8") // untouched key untouched
-  }
-
-  test("bucketedUpsert leaves untouched bucket files byte-identical") {
-    val dir = tmpDir("bprune")
-    val base = (1L to 100L).map(i => (i, s"v$i")).toDF("id", "v")
-    Sinks.writeBucketed(base, dir, "id", numBuckets = 8)
-    val before = bucketFiles(dir)
-    // one-key delta touches exactly one bucket
-    Sinks.bucketedUpsert(spark, dir, Seq((7L, "X")).toDF("id", "v"),
-      "id", numBuckets = 8)
-    val after = bucketFiles(dir)
-    val changed = after.keySet.filter(b => before.get(b) != after.get(b))
-    assert(changed.size == 1,
-      s"expected exactly one rewritten bucket, got $changed")
-  }
-
-  test("bucketedUpsert equals the naive full merge on random deltas") {
-    import org.scalacheck.{Gen, Prop, Test => SCTest}
-    val kvGen = for {
-      k <- Gen.chooseNum(1L, 60L)
-      v <- Gen.alphaStr.map(_.take(6))
-    } yield (k, v)
-    val prop = Prop.forAll(Gen.listOfN(25, kvGen), Gen.listOfN(8, kvGen)) {
-      (baseKv, deltaKv) =>
-        // last write wins within each side, like a keyed collection
-        val base = baseKv.toMap.toSeq
-        val delta = deltaKv.toMap.toSeq
-        val dir = tmpDir("bprop")
-        Sinks.writeBucketed(base.toDF("id", "v"), dir, "id", numBuckets = 4)
-        Sinks.bucketedUpsert(spark, dir, delta.toDF("id", "v"), "id",
-          numBuckets = 4)
-        val got = spark.read.parquet(dir).select("id", "v")
-          .as[(Long, String)].collect().toMap
-        val want = base.toMap ++ delta.toMap
-        got == want
-    }
-    val res = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(8), prop)
-    assert(res.passed, res.status.toString)
-  }
-
-  test("bucketedUpsert replay is a no-op (at-least-once safe)") {
-    val dir = tmpDir("breplay")
-    Sinks.writeBucketed((1L to 50L).map(i => (i, s"v$i")).toDF("id", "v"),
-      dir, "id", numBuckets = 4)
-    val delta = Seq((3L, "D3"), (51L, "D51")).toDF("id", "v")
-    Sinks.bucketedUpsert(spark, dir, delta, "id", numBuckets = 4)
-    val once = spark.read.parquet(dir).select("id", "v")
-      .as[(Long, String)].collect().toSet
-    Sinks.bucketedUpsert(spark, dir, delta, "id", numBuckets = 4)
-    val twice = spark.read.parquet(dir).select("id", "v")
-      .as[(Long, String)].collect().toSet
-    assert(once == twice && once.size == 51)
   }
 }

@@ -579,51 +579,6 @@ class StreamingOpsSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("foreachBatch streaming upsert into the bucketed ledger replays clean") {
-    // the production shape of the spec's poll loop: a status stream,
-    // latest-wins reduced per micro-batch, merged into the hash-bucketed
-    // ledger via the delta-pruned upsert. At-least-once delivery means
-    // the whole stream may replay — the end state must not change.
-    import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft-fb")
-    val target = root.resolve("ledger").toString
-    graft.sinks.Sinks.writeBucketed(
-      Seq((1L, "submitted"), (2L, "submitted"), (3L, "submitted"))
-        .toDF("job_id", "status"),
-      target, "job_id", 4)
-
-    def runOnce(): Unit = {
-      val input = MemoryStream[StatusUpdate]
-      val query = input.toDS().writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[StatusUpdate],
-            _: Long) =>
-          val latest = batch.groupByKey(_.job_id)
-            .reduceGroups((a, b) => if (a.ts.getTime >= b.ts.getTime) a else b)
-            .map(_._2)
-          graft.sinks.Sinks.bucketedUpsert(spark, target,
-            latest.toDF().select(col("job_id"), col("status")),
-            "job_id", 4)
-        }
-        .start()
-      try {
-        input.addData(StatusUpdate(1, ts(10), "in_progress"))
-        query.processAllAvailable()
-        input.addData(StatusUpdate(1, ts(20), "completed"),
-          StatusUpdate(2, ts(15), "failed"))
-        query.processAllAvailable()
-      } finally query.stop()
-    }
-
-    val want = Set((1L, "completed"), (2L, "failed"), (3L, "submitted"))
-    runOnce()
-    def state() = spark.read.parquet(target)
-      .select(col("job_id"), col("status"))
-      .as[(Long, String)].collect().toSet
-    assert(state() == want)
-    runOnce() // full at-least-once redelivery of every micro-batch
-    assert(state() == want)
-  }
-
   test("continuous asset ingest == the nightly asset day off the same artifacts") {
     import graft.operators.DailyIngest
     import org.apache.spark.sql.functions.{concat, encode, lit, when}
