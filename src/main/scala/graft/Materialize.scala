@@ -1,80 +1,30 @@
 package graft
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.storage.StorageLevel
 
-/** Shared-intermediate materialization policy (round 16, VERDICT r15
-  * "Next round" #8 / "What's wrong" #2).
+/** Shared-intermediate materialization: the one home for how a subtree
+  * consumed by several legs is computed once. Catalyst cannot share
+  * differently-filtered consumers, and concurrent broadcast builds race
+  * over one lazy frame, so without this each leg re-runs the subtree.
   *
-  * Query paths materialize a subtree consumed by several legs so
-  * Catalyst's inability to share differently-filtered consumers (and
-  * concurrent broadcast builds racing over one lazy frame) never
-  * re-runs it. The mechanism used everywhere was `localCheckpoint`,
-  * which is the right LOCAL-mode tool (cheap, truncates the lineage so
-  * plan audits stay readable and iterative loops bound their plan
-  * depth) but is not scale-safe as a default: it pins UNREPLICATED
-  * blocks on executors, so on a multi-executor deployment losing one
-  * executor after the checkpoint fails the query with no recompute
-  * path — a reliability cliff under spot/preemptible capacity
-  * (guide §5).
+  * Both forms are a `localCheckpoint`: cheap, and it truncates the
+  * lineage, so plan audits stay readable and iterative loops bound their
+  * plan depth. Its blocks are unreplicated, which is safe on the
+  * `local[N]` sessions every entry point builds ([[Harness.session]]).
   *
-  * This helper is the ONE home for that policy, switched by
-  * `spark.graft.materialize` (validated — an unknown value fails loud
-  * rather than silently running the non-scale-safe default):
-  *  - unset or `local`: `localCheckpoint`, exactly the previous
-  *    behavior — plans, bench numbers and the driver contract are
-  *    unchanged;
-  *  - `persist`: recomputable materialization for cluster deployments.
-  *    [[shared]] becomes `persist(MEMORY_AND_DISK)` — a lost block is
-  *    recomputed from lineage instead of failing the query. [[now]]
-  *    becomes a RELIABLE checkpoint (`Dataset.checkpoint`) when the
-  *    session has a checkpoint dir, else persist+count: the eager
-  *    sites include the iterative loops (CC rounds, BPE merges), whose
-  *    correctness depends on actually TRUNCATING lineage — persist
-  *    alone would re-serialize a multi-hundred-round chain into every
-  *    task (the measured `Soak bpe` StackOverflowError), so long
-  *    iterative jobs under `persist` must set
-  *    `sparkContext.setCheckpointDir`.
-  *    Two documented trades of `persist`: plans are not truncated at
-  *    the lazy sites (analysis cost on deep compositions), and Spark's
-  *    SQL cache holds persisted plans until an explicit unpersist —
-  *    fine for run-to-completion batch jobs (the pipelines here),
-  *    wrong for an unbounded streaming session, which should stay on
-  *    the default `local` mode (blocks are reclaimed by the
-  *    ContextCleaner after GC).
-  *
-  * [[shared]] is lazy (materializes at first action — construction and
-  * explain-only plan audits stay free); [[now]] is eager, for frames
-  * that feed several BROADCAST builds on concurrent threads, where jobs
-  * racing over a lazy frame each recompute it (the AnnFrames seal
-  * rationale, VERDICT r11 #2), and for loop-carried frames.
+  * [[shared]] is lazy: it materializes at the first action, so
+  * construction and explain-only plan audits stay free. [[now]] is eager,
+  * for frames that feed jobs on concurrent threads (broadcast builds,
+  * [[Parallel]] writes), where jobs racing over a lazy frame each
+  * recompute it (the AnnFrames seal rationale, VERDICT r11 #2), and for
+  * loop-carried frames.
   */
 object Materialize {
-  private def reliable(ds: Dataset[_]): Boolean =
-    ds.sparkSession.conf.getOption("spark.graft.materialize") match {
-      case None => false
-      case Some(v) if v.equalsIgnoreCase("local") => false
-      case Some(v) if v.equalsIgnoreCase("persist") => true
-      case Some(v) => throw new IllegalArgumentException(
-        s"spark.graft.materialize must be 'local' or 'persist', got '$v'")
-    }
-
   /** Lazily-materialized shared intermediate (one compute, N readers). */
-  def shared[T](ds: Dataset[T]): Dataset[T] =
-    if (reliable(ds)) ds.persist(StorageLevel.MEMORY_AND_DISK)
-    else ds.localCheckpoint(eager = false)
+  def shared[T](ds: Dataset[T]): Dataset[T] = ds.localCheckpoint(eager = false)
 
-  /** Eagerly-materialized shared intermediate — for frames feeding
-    * concurrent broadcast builds and for loop-carried frames (see
-    * scaladoc above). Runs a job at construction time by design. */
-  def now[T](ds: Dataset[T]): Dataset[T] =
-    if (reliable(ds)) {
-      if (ds.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        ds.checkpoint(eager = true) // reliable + lineage-truncating
-      else {
-        val p = ds.persist(StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        p
-      }
-    } else ds.localCheckpoint(eager = true)
+  /** Eagerly-materialized shared intermediate — for frames read by
+    * concurrent jobs and for loop-carried frames (see scaladoc above).
+    * Runs a job at construction time by design. */
+  def now[T](ds: Dataset[T]): Dataset[T] = ds.localCheckpoint(eager = true)
 }

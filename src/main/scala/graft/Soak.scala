@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * Scenarios (each documented on its method below):
   *  - `queries <query>...` — selected queries on the corpus;
   *  - `index [family...]` — per-family index build / daily / compact;
-  *  - `ingest` — DailyIngest snapshot and delta days, leg by leg;
+  *  - `ingest` — one DailyIngest delta day, leg by leg;
   *  - `gen` — seven-generation delta chain with a vacuum;
   *  - `lifecycle` — the chain, every family daily, release;
   *  - `bpe [rounds...]` — BPE merge training at realistic merge counts;
@@ -213,37 +213,41 @@ object Soak {
   /** `ingest`: measured end-to-end lifecycle of the
     * [[operators.DailyIngest]] product flow at N× scale — the
     * composition-level counterpart of the `index` scenario's per-family
-    * split: `build` = writing EVERY corpus index the pipeline reads (the
-    * amortized per-snapshot cost), `daily` = one full `DailyIngest.run`
-    * off those on-disk indexes — all five gates, the kept/disposition
-    * artifacts, both reports, ledger + logs, and the index_next
-    * compaction. The recurring number a scheduler would see per day.
+    * split: `build` = seeding EVERY corpus index the pipeline reads as
+    * generation 0 of a delta root (the amortized per-corpus cost),
+    * `daily` = one full `DailyIngest.runDelta` off that root — all
+    * gates, the kept/disposition artifacts, both reports, ledger +
+    * logs, and the day's generation write. The recurring number a
+    * scheduler would see per day.
     *
-    * `<workDir>/index` is always rewritten (the build is part of the
-    * measurement) and `<workDir>/out` holds the daily run's artifacts,
-    * overwritten per pass.
+    * `<workDir>/index` is wiped and re-seeded per run (the build is part
+    * of the measurement) and `<workDir>/out` holds the daily run's
+    * artifacts. Repeated daily passes are safe: day 0 reads gen ≤ 0 and
+    * overwrites its own gen=1.
     */
   private def ingest(r: Run): Unit = {
     import r._
+    val root = s"$workDir/index"
+    deleteTree(new java.io.File(root))
     timed("[ingest-soak] build", passes = 1) {
-      operators.DailyIngest.writeIndexes(spark, dataDir,
-        s"$workDir/index")
+      operators.DailyIngest.writeIndexesDelta(spark, dataDir, root)
       0L
     }
     timed("[ingest-soak] daily")(
-      operators.DailyIngest.run(spark, s"$workDir/index", dataDir,
+      operators.DailyIngest.runDelta(spark, root, dataDir,
         s"$workDir/out").count())
     // attribution legs: the daily number above decomposes into the
-    // GATES (dispositionOf off the disk index) and the COMPACTION
-    // (index_next snapshot write); the difference is reports + the
-    // kept/ledger/log writes. Measured separately so a regression in
-    // one leg is visible instead of smeared across the total.
+    // GATES (dispositionOf off the seed) and the GENERATION write; the
+    // difference is reports + the kept/ledger/log writes. Measured
+    // separately so a regression in one leg is visible instead of
+    // smeared across the total.
     val batch = operators.DailyIngest.split(spark, dataDir)._2
       .transform(graft.Materialize.shared)
     def idx(name: String) =
-      Tables.read(spark, s"$workDir/index/$name.parquet")
+      Tables.read(spark, s"$root/$name.parquet")
+        .filter(col("gen") <= 0).drop("gen")
     // the once-per-day batch signature compute the pipeline shares
-    // between the near-dup gate and index persistence
+    // between the near-dup gate and the generation write
     val (rawBands, rawSets) =
       operators.LLMQueries.signatureTables(batch)
     val bBands = rawBands.transform(graft.Materialize.shared)
@@ -258,10 +262,9 @@ object Soak {
         idx("norm_hash"), idx("text_bands"), idx("text_sets"),
         idx("eval_grams"), idx("eval_bands"), idx("eval_sets"),
         bBands, bSets).count())
-    timed("[ingest-soak] compact", passes = 1) {
-      operators.DailyIngest.compactIndexes(idx, batch, bBands, bSets,
-        bWins, (df, name) => df.write.mode("overwrite")
-          .parquet(s"$workDir/attr_next/$name.parquet"))
+    timed("[ingest-soak] gen-write", passes = 1) {
+      operators.DailyIngest.writeGeneration(batch, bBands, bSets, bWins,
+        s"$workDir/attr_gen", 1)
       0L
     }
     // phase-by-phase mirror of writeDay, one timed leg per action, so
@@ -288,32 +291,6 @@ object Soak {
         batch, bWins).count() +
       operators.CurationQueries.incrementalSubstringReportFrom(
         idx("substr_windows"), batch, bWins).count())
-    // the DELTA layout's full daily run — same gates and artifacts,
-    // but index persistence is an O(batch) generation write instead of
-    // the O(corpus) snapshot compact measured above. Repeated passes
-    // are safe: day 0 reads gen ≤ 0 and overwrites its own gen=1.
-    timed("[ingest-soak] delta-seed", passes = 1) {
-      operators.DailyIngest.writeIndexesDelta(spark, dataDir,
-        s"$workDir/delta")
-      0L
-    }
-    timed("[ingest-soak] delta-daily")(
-      operators.DailyIngest.runDelta(spark, s"$workDir/delta", dataDir,
-        s"$workDir/delta_out").count())
-    // the write-only comparison against `compact`: same families, but
-    // batch-sized generation partitions instead of a corpus rewrite
-    timed("[ingest-soak] delta-write", passes = 1) {
-      def w(df: org.apache.spark.sql.DataFrame, name: String): Unit =
-        df.write.mode("overwrite")
-          .parquet(s"$workDir/attr_delta/$name.parquet/gen=1")
-      w(operators.LLMQueries.hashIndex(batch), "text_hash")
-      w(operators.LLMQueries.normHashIndex(batch), "norm_hash")
-      w(bBands, "text_bands")
-      w(bSets, "text_sets")
-      w(operators.CurationQueries.substrWindowIndexFrom(bWins),
-        "substr_windows")
-      0L
-    }
   }
 
   /** `gen`: seven-generation delta-ingest soak — the generation-GC

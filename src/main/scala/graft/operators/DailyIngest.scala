@@ -13,7 +13,8 @@ import sinks.Sinks
   * artifact, the observability reports land beside them, the job
   * ledger and structured log record every step (the reference's
   * S5/S8 machinery — /root/reference/README.md:76,150 — wrapped around
-  * the curation ops), and the indexes compact into the next snapshot.
+  * the curation ops), and the batch's index rows land as the next
+  * generation of the one delta-layout index root (see [[runDelta]]).
   *
   * Every gate IS the proven incremental operator (q97/q139/q96/q150's
   * flows, q84's classifier); this object adds sequencing, artifact
@@ -42,11 +43,10 @@ import sinks.Sinks
   *     q158/q156 reports off the same window index
   *   - `ledger/` — S5 job-ledger rows, one per step
   *   - `logs/` — S8 structured log lines
-  *   - `index_next/` — compacted text_hash / norm_hash / substr_windows
   */
 object DailyIngest {
 
-  /** The text layouts' index families. */
+  /** The text index families, one partition dir each under a delta root. */
   private val Families = Seq("text_hash", "norm_hash", "text_bands",
     "text_sets", "substr_windows", "eval_grams", "eval_bands", "eval_sets")
 
@@ -65,29 +65,6 @@ object DailyIngest {
     val residue = col("doc_id") % CurationQueries.DeconBatchMod
     (train.filter(!residue.isin(pendingDays.toSeq: _*)),
       train.filter(residue === day))
-  }
-
-  /** Writes the corpus-side indexes the pipeline reads — the once-per-
-    * snapshot cost; `eval_grams` refreshes on the benchmark release
-    * cycle instead but lives in the same layout. */
-  def writeIndexes(spark: SparkSession, dataDir: String, dir: String,
-      pendingDays: Set[Int] = Set(0)): Unit = {
-    val (corpus, _) =
-      split(spark, dataDir, pendingDays.head, pendingDays)
-    def w(df: DataFrame, name: String): Unit =
-      df.write.mode("overwrite").parquet(s"$dir/$name.parquet")
-    w(LLMQueries.hashIndex(corpus), "text_hash")
-    w(LLMQueries.normHashIndex(corpus), "norm_hash")
-    val (bands, sets) = LLMQueries.signatureTables(corpus)
-    w(bands, "text_bands")
-    w(sets, "text_sets")
-    w(CurationQueries.substrWindowIndex(corpus), "substr_windows")
-    val all = Tables(spark, dataDir, "documents")
-    w(CurationQueries.evalGramIndex(all), "eval_grams")
-    val (eBands, eSets) =
-      LLMQueries.signatureTables(all.filter(col("doc_id") % 10 === 0))
-    w(eBands, "eval_bands")
-    w(eSets, "eval_sets")
   }
 
   /** Writes the corpus-side ASSET indexes [[runAssets]] reads — the
@@ -443,42 +420,8 @@ object DailyIngest {
       .orderBy(col("doc_id"))
   }
 
-  /** Merges today's batch into the read index frames and writes a
-    * COMPLETE next snapshot — additive/union compaction, never a
-    * corpus rescan. ONE definition shared by [[run]] (nightly) and
-    * [[graft.streaming.StreamingOps.continuousIngest]] (per
-    * micro-batch), so the two cadences compact identically. */
-  def compactIndexes(idx: String => DataFrame, batch: DataFrame,
-      write: (DataFrame, String) => Unit): Unit = {
-    val (batchBands, batchSets) = LLMQueries.signatureTables(batch)
-    compactIndexes(idx, batch, batchBands, batchSets,
-      CurationQueries.docWindows(batch), write)
-  }
-
-  /** [[compactIndexes]] with the batch's signature tables and window
-    * rows supplied — see the [[dispositionOf]] overload's rationale
-    * (compute each batch pass once per day, not once per consumer). */
-  def compactIndexes(idx: String => DataFrame, batch: DataFrame,
-      batchBands: DataFrame, batchSets: DataFrame,
-      batchWins: DataFrame, write: (DataFrame, String) => Unit): Unit = {
-    write(idx("text_hash")
-      .unionByName(LLMQueries.hashIndex(batch)).distinct(), "text_hash")
-    write(idx("norm_hash")
-      .unionByName(LLMQueries.normHashIndex(batch)).distinct(), "norm_hash")
-    write(idx("substr_windows")
-      .unionByName(CurationQueries.substrWindowIndexFrom(batchWins))
-      // corpus and batch ids are disjoint, so distinct-doc counts ADD
-      .groupBy(col("wh")).agg(sum(col("nd")).as("nd")), "substr_windows")
-    write(idx("text_bands").unionByName(batchBands), "text_bands")
-    write(idx("text_sets").unionByName(batchSets), "text_sets")
-    // frozen per benchmark release — carried through unchanged
-    write(idx("eval_grams"), "eval_grams")
-    write(idx("eval_bands"), "eval_bands")
-    write(idx("eval_sets"), "eval_sets")
-  }
-
-  /** The day's shared core: disposition + artifacts + (layout-specific)
-    * index persistence + bookkeeping. Its jobs are small, so it runs
+  /** [[runDelta]]'s core: disposition + artifacts + the day's index
+    * generation + bookkeeping. Its jobs are small, so it runs
     * independent ones concurrently ([[graft.Parallel]]) instead of
     * queueing one one-task job behind the next, in three steps:
     *
@@ -487,38 +430,36 @@ object DailyIngest {
     *     materialize side by side;
     *  3. four branches fan out: the disposition tail ([[dispositionTail]]:
     *     disposition, then `kept_docs` / `disposition.parquet` / ledger /
-    *     logs), the novelty report, the substring report, and
-    *     `persistNext` (the snapshot pipeline compacts into `index_next`,
-    *     the delta pipeline appends a generation in place).
+    *     logs), the novelty report, the substring report, and generation
+    *     `gen` of `rootDir` ([[writeGeneration]]).
     *
     * A frame read by more than one concurrent job is EAGER
     * (`Materialize.now`), because concurrent jobs over a lazy checkpoint
     * each recompute it (the race the Materialize scaladoc describes): the
-    * bands and sets feed the near-dup and fuzzy gates AND persistNext,
-    * and the window rows feed both reports AND persistNext. `batch` must
-    * come in eager for the same reason. A frame read by one branch stays
-    * lazy.
+    * bands and sets feed the near-dup and fuzzy gates AND the generation
+    * write, and the window rows feed both reports AND the generation
+    * write. `batch` must come in eager for the same reason. A frame read
+    * by one branch stays lazy.
     *
     * Every `idx` read the gates and reports use is constructed first
     * (each lists its files and reads one footer on the driver,
     * [[graft.Tables.read]]): a parquet read lists its files when it is
-    * constructed, so none can list the generation the delta persistNext
-    * is writing into the same root (that persistNext reads no index; the
-    * snapshot one reads `indexDir`, which nothing writes). The
-    * disposition's plan is built inside its branch: under AQE, building
-    * a gate's lazy checkpoint already runs its shuffle stages. No branch
-    * may mutate session conf (`Tables(…, "events")` does). */
+    * constructed, so none can list the generation being written into
+    * the same root. The disposition's plan is built inside its branch:
+    * under AQE, building a gate's lazy checkpoint already runs its
+    * shuffle stages. No branch may mutate session conf
+    * (`Tables(…, "events")` does). */
   private def writeDay(spark: SparkSession, batch: DataFrame,
-      idx: String => DataFrame, outDir: String, ts: String)(
-      persistNext: (DataFrame, DataFrame, DataFrame) => Unit): DataFrame = {
+      idx: String => DataFrame, rootDir: String, gen: Long, outDir: String,
+      ts: String): DataFrame = {
     val index = Families.zip(
       graft.Parallel.all(Families.map(name => () => idx(name)): _*)).toMap
     val (rawBands, rawSets) = LLMQueries.signatureTables(batch)
     val Seq(batchBands, batchSets, batchWins) = graft.Parallel.all(
-      () => rawBands.transform(graft.Materialize.now), // 2 gates + persistNext
-      () => rawSets.transform(graft.Materialize.now), // 2 gates + persistNext
+      () => rawBands.transform(graft.Materialize.now), // 2 gates + generation
+      () => rawSets.transform(graft.Materialize.now), // 2 gates + generation
       () => CurationQueries.docWindows(batch)
-        .transform(graft.Materialize.now)) // both reports + persistNext
+        .transform(graft.Materialize.now)) // both reports + generation
 
     var summary: DataFrame = null // the disposition branch's result
     graft.Parallel.all(
@@ -534,7 +475,8 @@ object DailyIngest {
           batchWins)
         .write.mode("overwrite")
         .parquet(s"$outDir/substring_report.parquet"),
-      () => persistNext(batchBands, batchSets, batchWins))
+      () => writeGeneration(batch, batchBands, batchSets, batchWins,
+        rootDir, gen))
     summary
   }
 
@@ -585,54 +527,29 @@ object DailyIngest {
       () => df.write.mode("overwrite").parquet(path(name))
     }: _*)
 
-  /** Runs the pipeline; returns the summary frame (step, n_docs) that
-    * is also written to the ledger. `ts` is caller-supplied so runs
-    * are deterministic (the S8 rule). */
-  def run(spark: SparkSession, indexDir: String, dataDir: String,
-      outDir: String, ts: String = "1970-01-01T00:00:00Z",
-      day: Int = 0): DataFrame = {
-    val batch = split(spark, dataDir, day, Set(day))._2
-      .transform(graft.Materialize.now) // every gate + concurrent writes
-    def idx(name: String): DataFrame =
-      Tables.read(spark, s"$indexDir/$name.parquet")
-
-    // next-snapshot indexes: merge the BATCH into the read tables —
-    // additive/union compaction, never a corpus rescan (the IndexStore
-    // compaction algebra on this pipeline's own split). index_next is a
-    // COMPLETE snapshot: tomorrow's run reads it as its indexDir, so a
-    // multi-day chain composes (DailyIngestSpec proves two days equal
-    // one rebuilt snapshot).
-    writeDay(spark, batch, idx, outDir, ts) { (bBands, bSets, bWins) =>
-      compactIndexes(idx, batch, bBands, bSets, bWins, (df, name) =>
-        df.write.mode("overwrite")
-          .parquet(s"$outDir/index_next/$name.parquet"))
-    }
-  }
-
-  // ---- delta index layout (the O(batch)-per-day refinement) ----------
+  // ---- the delta index layout ------------------------------------------
   //
-  // `Soak ingest`'s attribution legs measured the snapshot pipeline's
-  // recurring cost at a 7:1 corpus:batch ratio (10× of sf0.1): gates
-  // ≈ 44 s CPU, snapshot compaction ≈ 43 s CPU — HALF the daily bill
-  // is rewriting corpus-sized tables (text_sets' shingle arrays
-  // dominate), and that half is O(corpus): it grows with every
-  // ingested day while the gates stay O(batch). The delta layout
-  // removes it: every family is a partition-dir of GENERATIONS
-  // (`<name>.parquet/gen=K` — gen 0 is the corpus seed, gen day+1 is
-  // that day's batch-sized delta), the daily write is O(batch), and a
-  // replayed day overwrites its own generation (idempotent, the same
-  // per-partition-overwrite contract the continuousIngest twin uses
-  // for its outputs). This is the hand-rolled form of what a
-  // transactional table format (Delta/Iceberg) provides at 100 TB.
-  //
-  // Readers tolerate the layout by construction: hash anti-joins are
-  // unaffected by a key appearing in several generations; bands/sets
-  // rows are doc-keyed and generations are disjoint, so the multi-gen
-  // union IS the snapshot union; the window reports aggregate per-wh
-  // partial counts AFTER a batch-bounded semi-join
-  // (CurationQueries.touchedWins), so delta partials sum to snapshot
-  // totals without a corpus-wide shuffle. DailyIngestSpec pins the
-  // two-day delta chain byte-identical to the snapshot chain.
+  // Every text index family is a partition dir of GENERATIONS under one
+  // root, `<root>/<name>.parquet/gen=K`: gen 0 is the corpus seed
+  // ([[writeIndexesDelta]]), gen N+1 is the batch-sized delta of day (or
+  // micro-batch) N ([[writeGeneration]]). What holds:
+  //  - a day writes only its own generation, so its index write is
+  //    O(batch) and no corpus-sized table is ever rewritten;
+  //  - day N reads gen ≤ N, so a replayed day overwrites its own
+  //    generation from the same inputs and never reads it (idempotent
+  //    under at-least-once retry);
+  //  - the eval families are frozen per benchmark release: gen 0 only;
+  //  - generations hold disjoint doc ids, so readers see the index a
+  //    rebuild over the same docs would hold: hash anti-joins ignore a
+  //    key repeated across generations, bands/sets rows are doc-keyed,
+  //    and the window reports sum per-wh partial counts after a
+  //    batch-bounded semi-join (CurationQueries.touchedWins), with no
+  //    corpus-wide shuffle;
+  //  - [[foldDelta]] collapses committed generations into one gen 0
+  //    without changing what any reader sees.
+  // This is the hand-rolled form of what a transactional table format
+  // (Delta/Iceberg) provides. DailyIngestSpec pins a chained day equal
+  // to the same day off a fresh seed, and pins replay and fold.
 
   /** Seeds the delta layout: the corpus-side index of every family as
     * generation 0 under ONE root that [[runDelta]] both reads and
@@ -693,9 +610,30 @@ object DailyIngest {
         .parquet(s"$outRootDir/$name.parquet/gen=0")): _*)
   }
 
-  /** [[run]] against the delta layout: same gates, same artifacts, but
-    * index persistence is an O(batch) generation write into `rootDir`
-    * itself — no `index_next`, tomorrow reads the same root. */
+  /** Writes generation `gen` of the five growing families under
+    * `rootDir` from a batch and its signature tables and window rows:
+    * the ONE generation write shared by the nightly ([[runDelta]]) and
+    * continuous ([[graft.streaming.StreamingOps.continuousIngest]])
+    * cadences, so the two extend the layout identically. The five
+    * writes run concurrently and two of them read `batch`, so pass it
+    * materialized (the [[writeDay]] rule). */
+  def writeGeneration(batch: DataFrame, batchBands: DataFrame,
+      batchSets: DataFrame, batchWins: DataFrame, rootDir: String,
+      gen: Long): Unit =
+    writeFamilies(
+      LLMQueries.hashIndex(batch) -> "text_hash",
+      LLMQueries.normHashIndex(batch) -> "norm_hash",
+      batchBands -> "text_bands",
+      batchSets -> "text_sets",
+      CurationQueries.substrWindowIndexFrom(batchWins) -> "substr_windows")(
+      name => s"$rootDir/$name.parquet/gen=$gen")
+
+  /** Runs one ingest day against the delta root `rootDir`: the gates off
+    * generations ≤ `day`, the artifacts under `outDir`, and the batch's
+    * generation `day + 1` written into `rootDir` itself, which tomorrow
+    * reads. Returns the summary frame (step, n_docs) that is also
+    * written to the ledger. `ts` is caller-supplied so runs are
+    * deterministic (the S8 rule). */
   def runDelta(spark: SparkSession, rootDir: String, dataDir: String,
       outDir: String, ts: String = "1970-01-01T00:00:00Z",
       day: Int = 0): DataFrame = {
@@ -707,16 +645,6 @@ object DailyIngest {
     def idx(name: String): DataFrame =
       Tables.read(spark, s"$rootDir/$name.parquet")
         .filter(col("gen") <= day).drop("gen")
-
-    writeDay(spark, batch, idx, outDir, ts) { (bBands, bSets, bWins) =>
-      // eval_grams is frozen per benchmark release — gen 0 only
-      writeFamilies(
-        LLMQueries.hashIndex(batch) -> "text_hash",
-        LLMQueries.normHashIndex(batch) -> "norm_hash",
-        bBands -> "text_bands",
-        bSets -> "text_sets",
-        CurationQueries.substrWindowIndexFrom(bWins) -> "substr_windows")(
-        name => s"$rootDir/$name.parquet/gen=${day + 1}")
-    }
+    writeDay(spark, batch, idx, rootDir, day + 1, outDir, ts)
   }
 }

@@ -636,33 +636,8 @@ object StreamingOps {
       .select(col("doc_id"), col("source"), col("mean_weight"))
   }
 
-  /** L62 streaming: the DAILY-INGEST gate chain as a CONTINUOUS flow —
-    * every micro-batch is a miniature ingest day. The SAME
-    * [[graft.operators.DailyIngest.dispositionOf]] that renders the
-    * oracle-checked q159 and the nightly disk pipeline runs inside
-    * `foreachBatch` against the newest on-disk index generation, the
-    * per-doc disposition lands under `out/disposition/batch_id=N`
-    * (partition-dir layout, so one read reassembles the history), and
-    * [[graft.operators.DailyIngest.compactIndexes]] writes generation
-    * N+1 — so micro-batch N+1 sees micro-batch N's documents. One gate
-    * definition, three cadences (query / nightly / continuous), zero
-    * drift by construction.
-    *
-    * State lives entirely in the generation dirs, not in streaming
-    * state: `index_gen_0` is the caller-seeded corpus snapshot
-    * ([[graft.operators.DailyIngest.writeIndexes]] layout), batch N
-    * reads the newest generation ≤ N and OVERWRITES its own outputs —
-    * a replayed uncommitted batch (the foreachBatch at-least-once
-    * contract) rewrites generation N+1 from the same inputs, so the
-    * flow is idempotent.
-    *
-    * Scale posture: per micro-batch cost is the O(batch) daily cost
-    * DailyIngest already measures — every gate reads the batch plus a
-    * slim index; compaction unions batch-sized deltas onto a
-    * sequentially-read snapshot. The generation chain is the streaming
-    * rendering of the nightly `index_next` handoff.
-    */
-  /** The newest COMMITTED index generation under `workDir`, discovered
+  /** The newest COMMITTED `index_gen_N` snapshot under `workDir` — the
+    * index chain of the asset and vector streams — discovered
     * through the Hadoop FileSystem API so the generation chain works on
     * any supported storage — HDFS, S3A, local — not only a local disk
     * (ADVICE r14: `java.io.File.listFiles` returned null off-local and
@@ -686,33 +661,59 @@ object StreamingOps {
     s"$workDir/index_gen_${gens.max}"
   }
 
+  /** L62 streaming: the DAILY-INGEST gate chain as a CONTINUOUS flow —
+    * every micro-batch is a miniature ingest day on the same delta
+    * layout the nightly [[graft.operators.DailyIngest.runDelta]] uses.
+    * The SAME [[graft.operators.DailyIngest.dispositionOf]] that renders
+    * the oracle-checked q159 and the nightly pipeline runs inside
+    * `foreachBatch` against the generations ≤ N of the index root
+    * `workDir/index`, the per-doc disposition lands under
+    * `out/disposition/batch_id=N` (partition-dir layout, so one read
+    * reassembles the history), and
+    * [[graft.operators.DailyIngest.writeGeneration]] writes generation
+    * N+1 — so micro-batch N+1 sees micro-batch N's documents. One gate
+    * definition and one index layout for three cadences (query /
+    * nightly / continuous), zero drift by construction.
+    *
+    * Seed `workDir/index` with
+    * [[graft.operators.DailyIngest.writeIndexesDelta]]. State lives
+    * entirely in the index generations, not in streaming state: batch N
+    * reads gen ≤ N and OVERWRITES its own outputs, so a replayed
+    * uncommitted batch (the foreachBatch at-least-once contract)
+    * rewrites generation N+1 from the same inputs and never reads it —
+    * the flow is idempotent.
+    *
+    * Per micro-batch cost is the O(batch) daily cost: every gate reads
+    * the batch plus a slim index, and the index write is batch-sized.
+    * The batch and its signature tables are EAGER, the writeDay rule:
+    * each feeds several gates and then concurrent generation writes. */
   def continuousIngest(docs: Dataset[SourcedDoc], workDir: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[SourcedDoc] =
     docs.writeStream.foreachBatch {
       (batch: Dataset[SourcedDoc], batchId: Long) =>
         val spark = batch.sparkSession
-        val genDir = newestGenDir(spark, workDir, batchId,
-          "DailyIngest.writeIndexes layout")
+        val root = s"$workDir/index"
+        // gen ≤ batchId: a crashed attempt's own gen=batchId+1 partition
+        // must not feed its retry (the runDelta rule)
         def idx(name: String): DataFrame =
-          graft.Tables.read(spark, s"$genDir/$name.parquet")
-        val b = batch.toDF().transform(graft.Materialize.shared)
-        // the micro-batch's MinHash tables feed the near-dup gate AND
-        // the compaction — once per micro-batch (the writeDay rule)
+          graft.Tables.read(spark, s"$root/$name.parquet")
+            .filter(col("gen") <= batchId).drop("gen")
+        val b = batch.toDF()
+          .transform(graft.Materialize.now) // every gate + generation
         val (rawBands, rawSets) =
           graft.operators.LLMQueries.signatureTables(b)
-        val bBands = rawBands.transform(graft.Materialize.shared)
-        val bSets = rawSets.transform(graft.Materialize.shared)
+        val bBands = rawBands
+          .transform(graft.Materialize.now) // 2 gates + generation
+        val bSets = rawSets
+          .transform(graft.Materialize.now) // 2 gates + generation
         graft.operators.DailyIngest
           .dispositionOf(b, idx("text_hash"), idx("norm_hash"),
             idx("text_bands"), idx("text_sets"), idx("eval_grams"),
             idx("eval_bands"), idx("eval_sets"), bBands, bSets)
           .write.mode("overwrite")
           .parquet(s"$workDir/out/disposition/batch_id=$batchId")
-        graft.operators.DailyIngest.compactIndexes(idx, b, bBands,
-          bSets, graft.operators.CurationQueries.docWindows(b),
-          (df, name) =>
-            df.write.mode("overwrite")
-              .parquet(s"$workDir/index_gen_${batchId + 1}/$name.parquet"))
+        graft.operators.DailyIngest.writeGeneration(b, bBands, bSets,
+          graft.operators.CurationQueries.docWindows(b), root, batchId + 1)
     }
 
   /** An arriving media asset with its catalog memberships: the ASSET

@@ -269,8 +269,7 @@ class PlanAuditSpec extends SparkSpec {
     "withBackoff" -> "the spec's T6 retry rule, not yet wired into its flow",
     "readErrorFile" ->
       "the spec's S3 error-file scan, not yet wired into its flow",
-    "observedIngest" -> "waits on the pipeline run-manifest design",
-    "clearCheckpointDir" -> "MaterializeSpec's hook into private[spark] state"
+    "observedIngest" -> "waits on the pipeline run-manifest design"
   ) ++ Seq("tumblingCounts", "dedupByEventId", "sessionize",
     "sessionizeWithTimeout", "dedupWithinWatermark", "viewsBeforePurchase",
     "streamingIncrementalDedup", "streamingTokenize",

@@ -6,8 +6,8 @@ import graft.SparkSpec
 
 /** End-to-end gate for the DailyIngest orchestration: artifacts land,
   * the summary reconciles with the per-doc disposition, the gates agree
-  * with their in-memory operator definitions, and the compacted
-  * next-snapshot index equals a rebuild.
+  * with their in-memory operator definitions, and the index root after
+  * a day (or a chain of days) equals a rebuild.
   */
 class DailyIngestSpec extends SparkSpec {
   import spark.implicits._
@@ -19,11 +19,11 @@ class DailyIngestSpec extends SparkSpec {
   }
 
   test("daily ingest: artifacts, reconciliation, gate parity") {
-    val idxDir = tmp("idx")
+    val root = tmp("root")
     val outDir = tmp("out")
-    DailyIngest.writeIndexes(spark, sfDir, idxDir)
+    DailyIngest.writeIndexesDelta(spark, sfDir, root)
 
-    val summary = DailyIngest.run(spark, idxDir, sfDir, outDir)
+    val summary = DailyIngest.runDelta(spark, root, sfDir, outDir)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
     val (corpus, batch) = DailyIngest.split(spark, sfDir)
@@ -81,14 +81,16 @@ class DailyIngestSpec extends SparkSpec {
       .toSeq == Seq("completed"))
     assert(spark.read.json(s"$outDir/logs").count() == summary.size.toLong)
 
-    // the compacted next-snapshot index equals a rebuild over
-    // (corpus ∪ batch) — tomorrow reads index_next and nothing drifts
-    val got = spark.read.parquet(s"$outDir/index_next/text_hash.parquet")
+    // the root's generations (seed + the day's) fold to a rebuild over
+    // (corpus ∪ batch) — tomorrow reads the root and nothing drifts
+    val folded = tmp("folded")
+    DailyIngest.foldDelta(spark, root, folded)
+    val got = spark.read.parquet(s"$folded/text_hash.parquet").drop("gen")
     val wantHash = LLMQueries.hashIndex(corpus.unionByName(batch))
     assert(got.collect().map(_.toString).sorted.toSeq ==
       wantHash.collect().map(_.toString).sorted.toSeq)
     val gotW = spark.read
-      .parquet(s"$outDir/index_next/substr_windows.parquet")
+      .parquet(s"$folded/substr_windows.parquet").drop("gen")
     val wantW = CurationQueries
       .substrWindowIndex(corpus.unionByName(batch))
     assert(gotW.collect().map(_.toString).sorted.toSeq ==
@@ -271,10 +273,10 @@ class DailyIngestSpec extends SparkSpec {
   }
 
   test("q159 in-query disposition == the disk-read pipeline artifact") {
-    val idxDir = tmp("q159_idx")
+    val root = tmp("q159_root")
     val outDir = tmp("q159_out")
-    DailyIngest.writeIndexes(spark, sfDir, idxDir)
-    DailyIngest.run(spark, idxDir, sfDir, outDir)
+    DailyIngest.writeIndexesDelta(spark, sfDir, root)
+    DailyIngest.runDelta(spark, root, sfDir, outDir)
     val fromDisk = spark.read.parquet(s"$outDir/disposition.parquet")
       .collect().map(_.toString).sorted.toSeq
     val inQuery = DailyIngest.ingestDisposition(spark, sfDir)
@@ -284,7 +286,7 @@ class DailyIngestSpec extends SparkSpec {
     assert(inQuery.nonEmpty && inQuery == fromDisk)
   }
 
-  test("delta layout: two-day chain == the snapshot pipeline; replay is clean") {
+  test("delta layout: two-day chain == rebuild; replay is clean") {
     def artifacts(dir: String): Map[String, Seq[String]] =
       Seq("disposition.parquet", "novelty_report.parquet",
         "substring_report.parquet")
@@ -300,20 +302,16 @@ class DailyIngestSpec extends SparkSpec {
     DailyIngest.runDelta(spark, root, sfDir, dOut0, day = 0)
     DailyIngest.runDelta(spark, root, sfDir, dOut1, day = 1)
 
-    // snapshot chain: the proven nightly path over the same two days
-    val sIdx = tmp("delta_sidx")
-    val sOut0 = tmp("delta_sout0")
-    val sOut1 = tmp("delta_sout1")
-    DailyIngest.writeIndexes(spark, sfDir, sIdx, pendingDays = Set(0, 1))
-    DailyIngest.run(spark, sIdx, sfDir, sOut0, day = 0)
-    DailyIngest.run(spark, s"$sOut0/index_next", sfDir, sOut1, day = 1)
-
-    for ((d, s) <- Seq(dOut0 -> sOut0, dOut1 -> sOut1)) {
-      val (got, want) = (artifacts(d), artifacts(s))
-      for (a <- want.keys) {
-        assert(want(a).nonEmpty, s"$a is empty")
-        assert(got(a) == want(a), s"$a diverges between delta and snapshot")
-      }
+    // rebuild: day 1 off a fresh seed whose corpus already holds day 0
+    val rRoot = tmp("delta_rroot")
+    val rOut1 = tmp("delta_rout1")
+    DailyIngest.writeIndexesDelta(spark, sfDir, rRoot, pendingDays = Set(1))
+    DailyIngest.runDelta(spark, rRoot, sfDir, rOut1, day = 1)
+    val (day0, got, want) =
+      (artifacts(dOut0), artifacts(dOut1), artifacts(rOut1))
+    for (a <- want.keys) {
+      assert(day0(a).nonEmpty && want(a).nonEmpty, s"$a is empty")
+      assert(got(a) == want(a), s"$a diverges between chain and rebuild")
     }
 
     // replay: re-running day 1 overwrites its own generation and reads
@@ -354,11 +352,11 @@ class DailyIngestSpec extends SparkSpec {
       DailyIngest.runDelta(spark, folded, sfDir, outs(d), day = d)
 
     // day 6 through seed→4 gens→vacuum→2 more gens == day 6 off a
-    // from-scratch snapshot whose corpus already holds days 0..5
-    val sIdx = tmp("gen7_sidx")
+    // fresh seed whose corpus already holds days 0..5
+    val sRoot = tmp("gen7_sroot")
     val sOut = tmp("gen7_sout")
-    DailyIngest.writeIndexes(spark, sfDir, sIdx, pendingDays = Set(6))
-    DailyIngest.run(spark, sIdx, sfDir, sOut, day = 6)
+    DailyIngest.writeIndexesDelta(spark, sfDir, sRoot, pendingDays = Set(6))
+    DailyIngest.runDelta(spark, sRoot, sfDir, sOut, day = 6)
     for (a <- Seq("disposition.parquet", "novelty_report.parquet",
         "substring_report.parquet")) {
       val chained = spark.read.parquet(s"${outs(6)}/$a")
@@ -388,30 +386,5 @@ class DailyIngestSpec extends SparkSpec {
     assert(sortedRows(spark.read
         .parquet(s"$finalFold/substr_windows.parquet").drop("gen")) ==
       sortedRows(CurationQueries.substrWindowIndex(train)))
-  }
-
-  test("two-day chain: day 2 off day 1's index_next == a rebuilt snapshot") {
-    val idx0 = tmp("chain_idx0")
-    val out0 = tmp("chain_out0")
-    val out1 = tmp("chain_out1")
-    val idxFull = tmp("chain_idxfull")
-    val out1b = tmp("chain_out1b")
-    // start from a corpus that has ingested neither day 0 nor day 1
-    DailyIngest.writeIndexes(spark, sfDir, idx0, pendingDays = Set(0, 1))
-    DailyIngest.run(spark, idx0, sfDir, out0, day = 0)
-    // day 1 reads yesterday's compacted snapshot, nothing else
-    DailyIngest.run(spark, s"$out0/index_next", sfDir, out1, day = 1)
-    // the oracle path: one snapshot built directly over (corpus ∪ day-0)
-    DailyIngest.writeIndexes(spark, sfDir, idxFull, pendingDays = Set(1))
-    DailyIngest.run(spark, idxFull, sfDir, out1b, day = 1)
-    for (a <- Seq("disposition.parquet", "novelty_report.parquet",
-        "substring_report.parquet")) {
-      val chained = spark.read.parquet(s"$out1/$a")
-        .collect().map(_.toString).sorted.toSeq
-      val rebuilt = spark.read.parquet(s"$out1b/$a")
-        .collect().map(_.toString).sorted.toSeq
-      assert(chained.nonEmpty, s"$a is empty")
-      assert(chained == rebuilt, s"$a diverges between chain and rebuild")
-    }
   }
 }

@@ -223,15 +223,15 @@ class ReleaseBuildSpec extends SparkSpec {
       spark.read.parquet(s"$out/kept_docs.parquet")
     }.reduce(_.unionByName(_))
 
-    // 2. the ground truth: every day re-run off a from-scratch snapshot
-    //    holding exactly the residues that had already arrived (the
+    // 2. the ground truth: every day re-run off a fresh seed holding
+    //    exactly the residues that had already arrived (the
     //    DailyIngestSpec day-equivalence, applied to all seven days)
     val scratchKept = (0 until nDays).map { d =>
-      val idx = tmp(s"lc_sidx$d")
+      val seed = tmp(s"lc_seed$d")
       val out = tmp(s"lc_sout$d")
-      DailyIngest.writeIndexes(spark, sfDir, idx,
+      DailyIngest.writeIndexesDelta(spark, sfDir, seed,
         pendingDays = (d until nDays).toSet)
-      DailyIngest.run(spark, idx, sfDir, out, day = d)
+      DailyIngest.runDelta(spark, seed, sfDir, out, day = d)
       spark.read.parquet(s"$out/kept_docs.parquet")
     }.reduce(_.unionByName(_))
 

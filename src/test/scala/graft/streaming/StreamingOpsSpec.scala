@@ -688,10 +688,11 @@ class StreamingOpsSpec extends SparkSpec {
 
   test("continuous ingest: micro-batches chain generations like nightly days") {
     import graft.operators.DailyIngest
-    val root = java.nio.file.Files.createTempDirectory("graft-ci")
+    def tmp(tag: String) = java.nio.file.Files.createTempDirectory(tag)
       .toFile.getAbsolutePath
+    val root = tmp("graft-ci")
     // seed generation 0 from a corpus that has ingested neither day
-    DailyIngest.writeIndexes(spark, sfDir, s"$root/index_gen_0",
+    DailyIngest.writeIndexesDelta(spark, sfDir, s"$root/index",
       pendingDays = Set(0, 1))
     def docsOf(day: Int): Seq[SourcedDoc] =
       DailyIngest.split(spark, sfDir, day, Set(0, 1))._2
@@ -710,14 +711,13 @@ class StreamingOpsSpec extends SparkSpec {
     } finally query.stop()
 
     // micro-batch 1's disposition == the NIGHTLY rendering of day 1 off
-    // a snapshot rebuilt over (corpus ∪ day 0) — the two-day chain
+    // a fresh seed whose corpus already holds day 0 — the two-day chain
     // equivalence, now across cadences
-    val idxFull = java.nio.file.Files.createTempDirectory("graft-ci-idx")
-      .toFile.getAbsolutePath
-    val outFull = java.nio.file.Files.createTempDirectory("graft-ci-out")
-      .toFile.getAbsolutePath
-    DailyIngest.writeIndexes(spark, sfDir, idxFull, pendingDays = Set(1))
-    DailyIngest.run(spark, idxFull, sfDir, outFull, day = 1)
+    val seedFull = tmp("graft-ci-seed")
+    val outFull = tmp("graft-ci-out")
+    DailyIngest.writeIndexesDelta(spark, sfDir, seedFull,
+      pendingDays = Set(1))
+    DailyIngest.runDelta(spark, seedFull, sfDir, outFull, day = 1)
     val nightly = spark.read.parquet(s"$outFull/disposition.parquet")
       .select($"doc_id", $"disposition").as[(Long, String)]
       .collect().sorted.toSeq
@@ -727,13 +727,19 @@ class StreamingOpsSpec extends SparkSpec {
       .collect().sorted.toSeq
     assert(streamed.nonEmpty && streamed == nightly)
 
-    // generation 2 is a complete snapshot: its text_hash equals a
-    // rebuild over every ingested doc (corpus ∪ day 0 ∪ day 1)
+    // micro-batch N wrote generation N+1, and generations 0..2 fold to
+    // a complete index: its text_hash equals a rebuild over every
+    // ingested doc (corpus ∪ day 0 ∪ day 1)
+    val gens = new java.io.File(s"$root/index/text_hash.parquet")
+      .listFiles().map(_.getName).filter(_.startsWith("gen=")).sorted.toSeq
+    assert(gens == Seq("gen=0", "gen=1", "gen=2"))
+    val folded = tmp("graft-ci-fold")
+    DailyIngest.foldDelta(spark, s"$root/index", folded)
     val everything = graft.Tables(spark, sfDir, "documents")
       .filter($"doc_id" % 10 =!= 0)
     val want = graft.operators.LLMQueries.hashIndex(everything)
       .as[String].collect().sorted.toSeq
-    val got = spark.read.parquet(s"$root/index_gen_2/text_hash.parquet")
+    val got = spark.read.parquet(s"$folded/text_hash.parquet").drop("gen")
       .as[String].collect().sorted.toSeq
     assert(got == want)
   }
