@@ -47,6 +47,13 @@ object Harness {
       // by q96's verify join on the 30x soak. Disabled everywhere; the
       // unions that feed joins re-shuffle on their own keys instead.
       .config("spark.sql.unionOutputPartitioning", "false")
+      // Spark's default keeps 100 generated classes, but one sf0.1 pass of
+      // q194 compiles 438 distinct ones and q104 281 (CodegenMetrics'
+      // compile count with a cache that never evicts), so each pass
+      // recompiled most of its code. 2000 holds the largest query's classes
+      // with room to spare; the whole test suite's 9,338 distinct classes
+      // are not kept (holding them all raised its peak RSS by ~2.4 GB).
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -2,6 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 
 /** Compile a small JSON-Schema subset into a Column predicate validating a
   * JSON-string column — the engine half of the reference's runtime
@@ -29,25 +31,68 @@ import org.apache.spark.sql.functions._
   * handling); an `items` array that cannot be parsed is likewise
   * skipped permissively.
   *
-  * The compiled predicate is pure Column logic over `get_json_object`
-  * (plus one `from_json` + `forall` per `items` schema, and one native
-  * [[JsonTokenKind]] raw-token probe per scalar type check so `"5"` vs
-  * `5` and `"true"` vs `true` are distinguished — still codegen-
-  * friendly, no UDF); schema parsing happens once on the driver.
+  * The compiled predicate reads the document through ONE native
+  * [[JsonProbe]] over every object-key path the schema references: per
+  * path the text `get_json_object` returns and the raw token kind, so
+  * `"5"` vs `5` and `"true"` vs `true` are distinguished and each
+  * document is parsed once per row, not once per path. `items`,
+  * `patternProperties` and `additionalProperties` keep their `from_json`,
+  * [[JsonTokenKind]] element-kinds and `json_object_keys` forms, and each
+  * object-typed array element gets its own probe. Codegen-friendly, no
+  * UDF; the schema is parsed and its paths collected once on the driver.
   */
 object JsonSchemaLite {
 
   /** parse once (driver side) → predicate builder for a JSON string col.
     * The predicate is total: a null comparison (e.g. a bound applied to
     * non-numeric text) means the value fails validation, never NULL. */
-  def compile(schemaJson: String): Column => Column = {
-    val schema = resolveRefs(parseObj(schemaJson))
-    (c: Column) => coalesce(validate(schema, c, "$"), lit(false))
+  def compile(schemaJson: String): Validator =
+    new Validator(resolveRefs(parseObj(schemaJson)))
+
+  /** A compiled schema. `apply(json)` builds its own probe of `json`;
+    * a caller that projects [[paths]]`.probe(json)` as a column first and
+    * passes it to `apply(json, probe)` parses each row exactly once and
+    * can read the same probe's slots for its own columns. */
+  final class Validator private[JsonSchemaLite] (schema: JObject)
+      extends (Column => Column) {
+    /** The object-key paths the schema reads, as one probe. */
+    val paths: JsonPaths = pathsOf(schema, coercedRoot = false)
+
+    def apply(json: Column): Column = apply(json, paths.probe(json))
+
+    def apply(json: Column, probe: Column): Column =
+      coalesce(validate(schema, Doc(json, paths, probe), "$"), lit(false))
+  }
+
+  /** What a predicate reads of one JSON document: the document itself at
+    * "$", and per object-key path the `get_json_object` text or the raw
+    * token kind. */
+  private final class Doc(val json: Column,
+      slot: (String, Boolean) => Column) {
+    def text(path: String): Column =
+      if (path == "$") json else slot(path, false)
+    def kind(path: String): Column = slot(path, true)
+  }
+
+  private object Doc {
+    def apply(json: Column, paths: JsonPaths, probe: Column): Doc =
+      new Doc(json, (path, kind) =>
+        if (kind) paths.kind(probe, path) else paths.text(probe, path))
+  }
+
+  /** The paths `validate` reads: one dry build over a recording [[Doc]]
+    * (Column trees are cheap driver-side objects), so the path list
+    * cannot drift from the predicate that reads it. */
+  private def pathsOf(schema: JObject, coercedRoot: Boolean): JsonPaths = {
+    val seen = scala.collection.mutable.LinkedHashSet.empty[String]
+    validate(schema, new Doc(lit(null), (path, _) => {
+      seen += path
+      lit(null)
+    }), "$", coercedRoot)
+    JsonPaths(seen.toSeq)
   }
 
   // -- tiny driver-side JSON reader (json4s ships with Spark) -----------
-  import org.json4s._
-  import org.json4s.jackson.JsonMethods
 
   private def parseObj(s: String): JObject =
     JsonMethods.parse(s) match {
@@ -110,8 +155,9 @@ object JsonSchemaLite {
     }
 
   /** Object-key steps of a `$.a.b` path ("$" → no steps). Property names
-    * containing '.' are out of scope — the same limitation as the
-    * `get_json_object` paths this mirrors. */
+    * containing '.' or '[' are out of scope — the same limitation as the
+    * `get_json_object` paths this mirrors ([[JsonPaths]] rejects a `[`
+    * that does not open an array index when the schema compiles). */
   private def stepsOf(path: String): Seq[String] =
     if (path == "$") Seq.empty
     else path.stripPrefix("$.").split("\\.").toSeq
@@ -121,14 +167,14 @@ object JsonSchemaLite {
     * so raw-token kinds are unavailable at path "$" — scalar type
     * checks there fall back to the extract-based forms, and strictness
     * is restored one level up by the `items` element-kinds check. */
-  private def validate(schema: JObject, json: Column, path: String,
+  private def validate(schema: JObject, doc: Doc, path: String,
       coercedRoot: Boolean = false): Column = {
-    val here = if (path == "$") json else get_json_object(json, path)
+    val here = doc.text(path)
     // the RAW token kind at this path — distinguishes `"5"` from `5`
     // and `"true"` from `true`, which no quote-stripping extract can
     // (VERDICT r5-r8 "What's missing"; closed by JsonTokenKind)
     val strictHere = !(path == "$" && coercedRoot)
-    def rawKind = JsonTokenKind.tokenKind(json, stepsOf(path))
+    def rawKind = doc.kind(path)
     val typeOk: Column = str(schema, "type") match {
       case Some("object") =>
         // object-typed values survive a path-extract as `{...}` text
@@ -184,14 +230,14 @@ object JsonSchemaLite {
         }
         val kindsOk = expectedKind.map { k =>
           coalesce(
-            forall(JsonTokenKind.elementKinds(json, stepsOf(path)),
+            forall(JsonTokenKind.elementKinds(doc.json, stepsOf(path)),
               kk => kk === k), lit(true))
         }.getOrElse(lit(true))
         perElement && kindsOk
       case _ => lit(true)
     }
     val requiredOk = strings(schema, "required")
-      .map(k => get_json_object(json, s"$path.$k").isNotNull)
+      .map(k => doc.text(s"$path.$k").isNotNull)
       .foldLeft(lit(true))(_ && _)
     val propsOk = (schema \ "properties") match {
       case JObject(fields) =>
@@ -201,10 +247,10 @@ object JsonSchemaLite {
         fields.collect { case (name, sub: JObject) => (name, sub) }
           .foldLeft(lit(true)) { case (acc, (name, sub)) =>
             val subPath = s"$path.$name"
-            val subHere = get_json_object(json, subPath)
+            val subHere = doc.text(subPath)
             // a property constrains only when present; absence is handled
             // by `required`
-            acc && (subHere.isNull || propertyOk(sub, json, subPath))
+            acc && (subHere.isNull || propertyOk(sub, doc, subPath))
           }
       case _ => lit(true)
     }
@@ -213,7 +259,7 @@ object JsonSchemaLite {
     // null-coalesced to false so a failed branch can't poison the
     // oneOf count through three-valued logic
     def branchOk(sub: JObject): Column =
-      coalesce(validate(sub, json, path, coercedRoot) &&
+      coalesce(validate(sub, doc, path, coercedRoot) &&
         scalarOk(sub, here), lit(false))
     val anyOfOk = (schema \ "anyOf") match {
       case JArray(subs) =>
@@ -287,12 +333,9 @@ object JsonSchemaLite {
       patPropsOk && addlOk
   }
 
-  private def propertyOk(schema: JObject, json: Column,
-      path: String): Column = {
-    val v = get_json_object(json, path)
-    val base = validate(schema, json, path)
-    base && scalarOk(schema, v)
-  }
+  private def propertyOk(schema: JObject, doc: Doc,
+      path: String): Column =
+    validate(schema, doc, path) && scalarOk(schema, doc.text(path))
 
   /** Scalar constraints shared by property values and array elements:
     * numeric bounds, string length bounds, regex pattern, enum. */
@@ -328,7 +371,10 @@ object JsonSchemaLite {
     * (closing VERDICT r7 #3 / r8 "What's missing" #3: `[1,2]` now fails
     * `items:{"type":"string"}` and `["5"]` fails `{"type":"number"}`).
     * Object/array elements keep their raw JSON text, so their OWN
-    * property paths validate strictly. */
-  private def elementOk(schema: JObject, e: Column): Column =
-    validate(schema, e, "$", coercedRoot = true) && scalarOk(schema, e)
+    * property paths validate strictly, through the element's own probe. */
+  private def elementOk(schema: JObject, e: Column): Column = {
+    val paths = pathsOf(schema, coercedRoot = true)
+    validate(schema, Doc(e, paths, paths.probe(e)), "$",
+      coercedRoot = true) && scalarOk(schema, e)
+  }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.Tables
+import graft.functions.JsonPaths
 import scala.collection.immutable.ListMap
 
 /** The reference system's own dataflows, rendered Spark-first:
@@ -22,10 +23,13 @@ import scala.collection.immutable.ListMap
   *
   * The batch-result and request "files" are derived deterministically from
   * `orders` (driver contract: inputs come from the sf parquet tables), then
-  * serialized through to_json and re-parsed with from_json — so the JSON
-  * scan/extract path is exercised for real, not simulated. The DuckDB
-  * oracle rebuilds the same JSON with json_object and extracts through the
-  * same paths.
+  * serialized through to_json and parsed again — so the JSON scan/extract
+  * path is exercised for real, not simulated. q10/q11 parse each JSON
+  * string (the line, its content, q10's last event) once per row, through
+  * one native [[graft.functions.JsonProbe]] projected as its own column;
+  * q12 keeps from_json, whose corrupt-record split is the spec's
+  * malformed-line check. The DuckDB oracle rebuilds the same JSON with
+  * json_object and extracts through the same paths.
   *
   * Scale posture: everything is a single pass over orders plus one
   * key-equi join (J2) that shuffles both sides on custom_id; no windows, no
@@ -83,12 +87,10 @@ object SpecPipeline {
                 .as("message"))).as("choices")).as("body"))).as("response")))
         .as("line"))
 
-  private val resultSchema = StructType.fromDDL(
-    """custom_id string,
-      |error struct<code: string, message: string>,
-      |response struct<status_code: bigint,
-      |  body: struct<choices: array<struct<
-      |    message: struct<role: string, content: string>>>>>""".stripMargin)
+  private val ContentPath = "$.response.body.choices[0].message.content"
+  /** The result line's paths (README.md:93-96), read by one probe. */
+  private val linePaths =
+    JsonPaths(Seq("$.custom_id", "$.error", ContentPath))
 
   /** The user-supplied response-content schema (README.md:99 — callers
     * pass a JSON Schema string at request time). Compiled once on the
@@ -106,26 +108,42 @@ object SpecPipeline {
   private val responseValid = graft.functions.JsonSchemaLite
     .compile(ResponseSchemaJson)
 
-  /** Parse + extract + validate each result line (README.md:93-102).
-    * Columns: custom_id, prio, is_err, category, confidence, content,
-    * is_valid.
+  /** A result-line frame's `line` column replaced by its custom_id,
+    * is_err and content (README.md:93-96), all read from one probe of
+    * [[linePaths]] projected as its own column, so the line is parsed
+    * once per row. */
+  private[graft] def lineFields(lines: DataFrame): DataFrame = {
+    val line = col("line_probe")
+    lines.withColumn("line_probe", linePaths.probe(col("line")))
+      // non-nullable join key: for a nullable one q10's join infers an
+      // isnotnull filter, which pushdown rewrites to the whole to_json →
+      // parse and runs in the one-task scan stage before Scale.byKey's
+      // exchange. Exact: no target id is empty.
+      .withColumn("custom_id",
+        coalesce(linePaths.text(line, "$.custom_id"), lit("")))
+      // an `error` that is not an object is no error, as a struct-typed
+      // from_json read of it gives null
+      .withColumn("is_err",
+        linePaths.kind(line, "$.error").eqNullSafe("object"))
+      .withColumn("content", linePaths.text(line, ContentPath))
+      .drop("line", "line_probe")
+  }
+
+  /** Parse + extract + validate each result line (README.md:93-102): the
+    * line through [[lineFields]], the content through one probe of the
+    * user schema's paths, which also yields the confidence.
+    * Columns: k, prio, custom_id, is_err, content, is_valid, confidence.
     */
-  private def judgedResults(spark: SparkSession, dir: String): DataFrame =
-    resultLines(spark, dir)
-      .withColumn("r", from_json(col("line"), resultSchema))
-      .select(col("k"), col("prio"),
-        // non-nullable join key: for a nullable one q10's join infers an
-        // isnotnull filter, which pushdown rewrites to the whole to_json →
-        // from_json round-trip and runs in the one-task scan stage before
-        // Scale.byKey's exchange. Exact: no target id is empty.
-        coalesce(col("r.custom_id"), lit("")).as("custom_id"),
-        col("r.error").isNotNull.as("is_err"),
-        expr("try_element_at(r.response.body.choices, 1)")
-          .getField("message").getField("content").as("content"))
-      .withColumn("c",
-        from_json(col("content"), StructType.fromDDL(
-          "category string, confidence double")))
-      .withColumn("is_valid", !col("is_err") && responseValid(col("content")))
+  private def judgedResults(spark: SparkSession, dir: String): DataFrame = {
+    val content = col("content_probe")
+    lineFields(resultLines(spark, dir))
+      .withColumn("content_probe", responseValid.paths.probe(col("content")))
+      .withColumn("is_valid",
+        !col("is_err") && responseValid(col("content"), content))
+      .withColumn("confidence", responseValid.paths
+        .text(content, "$.confidence").try_cast("double"))
+      .drop("content_probe")
+  }
 
   /** Target document collection (README.md:129-138): keyed by custom_id,
     * status `in_progress`, with an existing event_response array for a
@@ -145,6 +163,9 @@ object SpecPipeline {
 
   // ---- q10: the flagship merge ---------------------------------------
 
+  /** The paths q10 reads of the merged array's last event_response. */
+  private val lastPaths = JsonPaths(Seq("$.category", "$.confidence"))
+
   /** Per-document final state after result processing: `$push` of
     * {event_response, updated} + ai_status=completed on valid content;
     * ai_status=failed (array untouched) on error or invalid content
@@ -153,6 +174,7 @@ object SpecPipeline {
     */
   def flagshipResults(spark: SparkSession, dir: String): DataFrame = {
     val now = lit("2024-06-01 00:00:00").cast("timestamp")
+    val last = col("last_probe")
     targets(spark, dir)
       .join(judgedResults(spark, dir), Seq("custom_id"))
       .withColumn("merged",
@@ -164,13 +186,17 @@ object SpecPipeline {
       .select(col("custom_id"),
         when(col("is_valid"), "completed").otherwise("failed").as("ai_status"),
         size(col("merged")).cast("long").as("n_responses"),
-        get_json_object(
-          expr("try_element_at(merged, -1)").getField("event_response"),
-          "$.category").as("last_category"),
-        get_json_object(
-          expr("try_element_at(merged, -1)").getField("event_response"),
-          "$.confidence").cast("double").as("last_confidence"))
+        expr("try_element_at(merged, -1)").getField("event_response")
+          .as("last_event"))
+      // sorted before the last element is parsed: the range exchange's
+      // bound-sampling job and its map stage each re-run their input, so
+      // the JSON projection above the sort runs once, in the write stage
       .orderBy(col("custom_id"))
+      .withColumn("last_probe", lastPaths.probe(col("last_event")))
+      .select(col("custom_id"), col("ai_status"), col("n_responses"),
+        lastPaths.text(last, "$.category").as("last_category"),
+        lastPaths.text(last, "$.confidence").cast("double")
+          .as("last_confidence"))
   }
 
   /** A7 rollup of the same run: per priority, counts of error lines,
@@ -185,7 +211,7 @@ object SpecPipeline {
         count(when(col("is_err"), 1)).as("n_errors"),
         count(when(!col("is_err") && !col("is_valid"), 1)).as("n_invalid"),
         count(when(col("is_valid"), 1)).as("n_completed"),
-        round(sum(when(col("is_valid"), col("c.confidence"))
+        round(sum(when(col("is_valid"), col("confidence"))
           .cast("decimal(18,6)")).cast("double")
           / count(when(col("is_valid"), 1)), 6).as("avg_confidence"))
       .orderBy(col("prio"))
@@ -331,8 +357,9 @@ object SpecPipeline {
     *   %19 → code omitted                     (required fails)
     *   %11 → code 12 chars                    (maxLength fails)
     *   %13 → score 150                        (maximum fails)
-    * Scale shape: pure per-row projection, codegen'd JSON path extracts —
-    * no shuffle except the determinism sort. */
+    * Scale shape: pure per-row projection, one JSON probe per document
+    * (plus the `items` element parse) — no shuffle except the determinism
+    * sort. */
   def schemaValidation(spark: SparkSession, dir: String): DataFrame = {
     val k = col("doc_id")
     val tags = when(k % 17 === 0, lit("\"notanarray\""))
@@ -348,7 +375,9 @@ object SpecPipeline {
       lit(",\"score\":"), score.cast("string"), lit("}"))
     Tables(spark, dir, "documents")
       .select(col("doc_id"), js.as("js"))
-      .select(col("doc_id"), tagSchemaValid(col("js")).as("valid"))
+      .withColumn("js_probe", tagSchemaValid.paths.probe(col("js")))
+      .select(col("doc_id"),
+        tagSchemaValid(col("js"), col("js_probe")).as("valid"))
       .orderBy(col("doc_id"))
   }
 

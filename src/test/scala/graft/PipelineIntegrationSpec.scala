@@ -3,7 +3,6 @@ package graft
 import graft.operators.{SpecPipeline, StateMachine}
 import graft.sinks.Sinks
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** End-to-end lifecycle on sf0.001 with real sinks on temp dirs —
   * mirrors the reference's integration tests
@@ -15,8 +14,7 @@ import java.nio.file.Files
 class PipelineIntegrationSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(name: String) =
-    Files.createTempDirectory(s"graft-it-$name").resolve("t").toString
+  private def tmp(name: String) = s"${tempDir(s"graft-it-$name")}/t"
 
   test("ingest → ledger → poll-merge (replayed) → results, end to end") {
     // §3.1 ingest: validation produces line-granular errors for the

@@ -269,7 +269,9 @@ class PlanAuditSpec extends SparkSpec {
     "withBackoff" -> "the spec's T6 retry rule, not yet wired into its flow",
     "readErrorFile" ->
       "the spec's S3 error-file scan, not yet wired into its flow",
-    "observedIngest" -> "waits on the pipeline run-manifest design"
+    "observedIngest" -> "waits on the pipeline run-manifest design",
+    "tokenKind" ->
+      "the single-path raw-kind reference JsonProbe's kind slot is pinned against"
   ) ++ Seq("tumblingCounts", "dedupByEventId", "sessionize",
     "sessionizeWithTimeout", "dedupWithinWatermark", "viewsBeforePurchase",
     "streamingIncrementalDedup", "streamingTokenize",
@@ -323,6 +325,24 @@ class PlanAuditSpec extends SparkSpec {
       "lambdafunction(x#2, x#2, false)), false) >= 2)").isEmpty)
     assert(heavyInferredFilters("Project [from_json(line#1) AS r#2]").isEmpty)
   }
+
+  // The result path parses each JSON string once per row: q10's line,
+  // content and last event, and q11's line and content, each through one
+  // json_probe projected as its own column. A probe the optimizer inlined
+  // into its readers, or a get_json_object, from_json or json_token_kind
+  // beside it, would parse the same string again.
+  for ((name, probes) <- Seq("q10_flagship_results" -> 3,
+      "q11_result_outcomes" -> 2))
+    test(s"$name: each JSON string is probed once, never re-parsed") {
+      val plan = SparkEntry.queries(name)(spark, sfDir)
+        .queryExecution.optimizedPlan.toString
+      val reparsed = Seq("get_json_object(", "from_json(", "json_token_kind(")
+        .filter(plan.contains)
+      assert(reparsed.isEmpty, s"$name still parses with " +
+        reparsed.mkString(", "))
+      assert("json_probe\\(".r.findAllIn(plan).size == probes,
+        s"$name should hold one json_probe per JSON column ($probes):\n$plan")
+    }
 
   for ((name, fn) <- SparkEntry.queries) {
     test(s"$name: no cartesian product, no unpartitioned window") {

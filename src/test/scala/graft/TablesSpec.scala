@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.GraftSparkShim
 import org.apache.spark.sql.DataFrame
@@ -13,8 +12,7 @@ class TablesSpec extends SparkSpec {
 
   private val key = "spark.sql.legacy.parquet.nanosAsLong"
 
-  private def tmpDir(prefix: String): File =
-    Files.createTempDirectory(prefix).toFile
+  private def tmpDir(prefix: String): File = new File(tempDir(prefix))
 
   /** What a plan exposes downstream: names, types and nullability of the
     * schema and of the optimized plan's output (expression ids differ by
@@ -160,7 +158,7 @@ class TablesSpec extends SparkSpec {
     // and truncate-toward-zero division differ
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, unix_micros}
-    val tmp = java.nio.file.Files.createTempDirectory("graft_events").toFile
+    val tmp = tmpDir("graft_events")
     Seq((1L, -1999999999L), (2L, 1500L), (3L, 0L))
       .toDF("event_id", "ts")
       .write.mode("overwrite")

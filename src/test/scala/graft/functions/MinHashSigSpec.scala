@@ -99,7 +99,8 @@ class MinHashSigSpec extends SparkSpec {
     assert(hasStatic(classOf[MinHashBandKeys], "kernel"),
       "MinHashBandKeys.kernel lost its static forwarder")
     assert(hasStatic(classOf[JsonTokenKind], "kindAt") &&
-      hasStatic(classOf[JsonTokenKind], "elementKindsAt"),
+      hasStatic(classOf[JsonTokenKind], "elementKindsAt") &&
+      hasStatic(classOf[JsonTokenKind], "probeAt"),
       "JsonTokenKind kernels lost their static forwarders")
   }
 }

@@ -1206,9 +1206,7 @@ class CurationQueriesSpec extends SparkSpec {
   }
 
   test("novelty report off the disk window index == in-memory") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_novelty_idx").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(tempDir("graft_novelty_idx"))
     IndexStore.writeSubstrWindows(spark, sfDir, dir.getAbsolutePath)
     val (_, batch) = IndexStore.docSplit(spark, sfDir)
     val fromDisk = CurationQueries.noveltyReport(

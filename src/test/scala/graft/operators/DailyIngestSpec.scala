@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 
 /** End-to-end gate for the DailyIngest orchestration: artifacts land,
@@ -12,11 +10,7 @@ import graft.SparkSpec
 class DailyIngestSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(tag: String) = {
-    val d = Files.createTempDirectory(s"graft_ingest_$tag").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
+  private def tmp(tag: String) = tempDir(s"graft_ingest_$tag")
 
   test("daily ingest: artifacts, reconciliation, gate parity") {
     val root = tmp("root")

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import graft.{SparkEntry, SparkSpec}
 
 /** The disk-read daily path must equal the in-memory oracle query for
@@ -13,11 +11,7 @@ import graft.{SparkEntry, SparkSpec}
   */
 class IndexStoreSpec extends SparkSpec {
 
-  private lazy val indexDir = {
-    val dir = Files.createTempDirectory("graft_index_spec").toFile
-    dir.deleteOnExit()
-    dir.getAbsolutePath
-  }
+  private lazy val indexDir = tempDir("graft_index_spec")
 
   for ((family, twin, build, daily) <- IndexStore.families)
     test(s"$family: daily leg off the disk index == $twin") {
@@ -34,11 +28,7 @@ class IndexStoreSpec extends SparkSpec {
   // from the index the oracle queries prove correct.
   for ((family, tables, compact, rebuild) <- IndexStore.compactions)
     test(s"$family: compaction == full rebuild over (corpus ∪ batch)") {
-      def tmp(tag: String) = {
-        val d = Files.createTempDirectory(s"graft_${tag}_$family").toFile
-        d.deleteOnExit()
-        d.getAbsolutePath
-      }
+      def tmp(tag: String) = tempDir(s"graft_${tag}_$family")
       val base = tmp("cidx")
       val out = tmp("cout")
       val full = tmp("cfull")

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import graft.{SparkSpec, Tables}
 
 /** End-to-end gate for the ReleaseBuild orchestration: artifacts land,
@@ -10,11 +8,7 @@ import graft.{SparkSpec, Tables}
 class ReleaseBuildSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(tag: String) = {
-    val d = Files.createTempDirectory(s"graft_release_$tag").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
+  private def tmp(tag: String) = tempDir(s"graft_release_$tag")
 
   test("release build: artifacts, operator parity, idempotent rerun") {
     val outDir = tmp("out")

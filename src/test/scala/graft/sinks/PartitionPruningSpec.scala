@@ -25,8 +25,7 @@ class PartitionPruningSpec extends SparkSpec {
   }
 
   private lazy val ledgerDir = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-prune")
-      .resolve("ledger").toString
+    val dir = s"${tempDir("graft-prune")}/ledger"
     Sinks.appendLedger(
       (1L to 40L).map(i => (i, Seq("submitted", "processing", "completed",
         "failed")((i % 4).toInt))).toDF("job_id", "status"),
@@ -50,8 +49,7 @@ class PartitionPruningSpec extends SparkSpec {
     // the dimension must be a real source scan: a literal Seq would be
     // constant-folded into a LocalRelation, leaving no selective filter
     // for the DPP rule to find
-    val dimDir = java.nio.file.Files.createTempDirectory("graft-dim")
-      .resolve("dim").toString
+    val dimDir = s"${tempDir("graft-dim")}/dim"
     Seq(("submitted", "active"), ("processing", "active"),
       ("completed", "terminal"), ("failed", "terminal"))
       .toDF("status", "cls")

@@ -7,8 +7,7 @@ import java.nio.file.Files
 class SinksSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(name: String) =
-    Files.createTempDirectory(s"graft-$name").resolve("t").toString
+  private def tmpDir(name: String) = s"${tempDir(s"graft-$name")}/t"
 
   test("overwriteSwap atomically replaces table contents") {
     val dir = tmpDir("swap")
@@ -40,7 +39,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("error-file scan surfaces each line as a WARN log row") {
-    val f = Files.createTempDirectory("graft-errfile").resolve("errors.jsonl")
+    val f = java.nio.file.Paths.get(tempDir("graft-errfile"), "errors.jsonl")
     Files.writeString(f,
       "{\"custom_id\": \"order-1\", \"error\": \"bad\"}\nplain text line\n")
     val rows = Sinks.readErrorFile(spark, f.toString)

@@ -171,8 +171,7 @@ class StreamingOpsSpec extends SparkSpec {
 
   test("streaming IVFPQ search == the batch ADC ranking off the disk " +
       "index") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sivfpq").toFile.getAbsolutePath
+    val dir = tempDir("graft_sivfpq")
     graft.operators.IndexStore.writeIvfPq(spark, sfDir, dir)
     val cents = spark.read.parquet(s"$dir/ivfpq_centroids.parquet")
     val rcb = spark.read.parquet(s"$dir/ivfpq_codebook.parquet")
@@ -431,7 +430,7 @@ class StreamingOpsSpec extends SparkSpec {
     // production binding: readStream over a landing directory →
     // watermarked agg → parquet sink with checkpoint. AvailableNow +
     // no-data microbatches flush windows the watermark has passed.
-    val root = java.nio.file.Files.createTempDirectory("graft-stream")
+    val root = java.nio.file.Paths.get(tempDir("graft-stream"))
     val in = root.resolve("in").toString
     val out = root.resolve("out").toString
     val chk = root.resolve("chk").toString
@@ -582,8 +581,7 @@ class StreamingOpsSpec extends SparkSpec {
   test("continuous asset ingest == the nightly asset day off the same artifacts") {
     import graft.operators.DailyIngest
     import org.apache.spark.sql.functions.{concat, encode, lit, when}
-    val root = java.nio.file.Files.createTempDirectory("graft-cai")
-      .toFile.getAbsolutePath
+    val root = tempDir("graft-cai")
     DailyIngest.writeAssetIndexes(spark, sfDir, s"$root/index_gen_0")
 
     // arriving rows = the two catalog universes' daily batches, each
@@ -626,8 +624,7 @@ class StreamingOpsSpec extends SparkSpec {
     } finally query.stop()
 
     // the nightly asset day off the SAME disk artifacts
-    val outN = java.nio.file.Files.createTempDirectory("graft-cai-n")
-      .toFile.getAbsolutePath
+    val outN = tempDir("graft-cai-n")
     DailyIngest.runAssets(spark, s"$root/index_gen_0", sfDir, outN)
     def rowsOf(p: String): Seq[String] =
       spark.read.parquet(p).collect().map(_.toString).sorted.toSeq
@@ -646,8 +643,7 @@ class StreamingOpsSpec extends SparkSpec {
 
   test("continuous vector ingest == the nightly vector day off the same artifacts") {
     import graft.operators.{DailyIngest, IndexStore}
-    val root = java.nio.file.Files.createTempDirectory("graft-cvi")
-      .toFile.getAbsolutePath
+    val root = tempDir("graft-cvi")
     DailyIngest.writeVectorIndexes(spark, sfDir, s"$root/index_gen_0")
 
     // arriving rows = the q194 daily batch universe, in the exact
@@ -666,8 +662,7 @@ class StreamingOpsSpec extends SparkSpec {
     } finally query.stop()
 
     // the nightly vector day off the SAME disk artifacts
-    val outN = java.nio.file.Files.createTempDirectory("graft-cvi-n")
-      .toFile.getAbsolutePath
+    val outN = tempDir("graft-cvi-n")
     DailyIngest.runVectors(spark, s"$root/index_gen_0", sfDir, outN)
     def rowsOf(p: String): Seq[String] =
       spark.read.parquet(p).collect().map(_.toString).sorted.toSeq
@@ -688,8 +683,7 @@ class StreamingOpsSpec extends SparkSpec {
 
   test("continuous ingest: micro-batches chain generations like nightly days") {
     import graft.operators.DailyIngest
-    def tmp(tag: String) = java.nio.file.Files.createTempDirectory(tag)
-      .toFile.getAbsolutePath
+    def tmp(tag: String) = tempDir(tag)
     val root = tmp("graft-ci")
     // seed generation 0 from a corpus that has ingested neither day
     DailyIngest.writeIndexesDelta(spark, sfDir, s"$root/index",
